@@ -30,7 +30,8 @@ from idzebra_spark.operators.segment import (
     compact_index,
     update_index,
 )
-from idzebra_spark.operators.wand import SegmentIndex
+from idzebra_spark.operators.wand import (
+    SegmentIndex, tree_patterns, tree_rank_terms)
 from idzebra_spark.plans.query import Node, parse
 
 
@@ -303,9 +304,14 @@ class ZebraSpark:
         mixing ops) batch through the rset-DAG twin
         (SegmentIndex.search_tree_many) — a mixed workload costs TWO
         cogrouped jobs total, never one per query; each query's rows
-        are identical to ``search(q, k)``."""
+        are identical to ``search(q, k)``. Before either runs, every
+        query's dictionary work (flat terms, tree rank terms, wildcard
+        expansions) is resolved in ONE dictionary job, so both plans
+        read only memo hits."""
         flat_specs: dict[str, dict] = {}
         tree_specs: dict[str, object] = {}
+        terms_needed: set[str] = set()
+        patterns: list[tuple] = []
         for qid, qs in queries.items():
             root = self._fold_node(parse(qs).root)
             flat = _flat_rankable(root)
@@ -313,8 +319,12 @@ class ZebraSpark:
                 mode, terms, neg = flat
                 flat_specs[qid] = {"terms": terms, "mode": mode,
                                    "not_terms": neg}
+                terms_needed.update(t.lower() for t in terms)
             else:
-                tree_specs[qid] = root.to_rset_tree()
+                tree = tree_specs[qid] = root.to_rset_tree()
+                terms_needed.update(t.lower() for t in tree_rank_terms(tree))
+                patterns += tree_patterns(tree)
+        self.index.resolve(sorted(terms_needed), patterns)
         parts = []
         if flat_specs:
             parts.append(self.index.topk_many(flat_specs, k))

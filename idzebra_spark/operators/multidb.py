@@ -75,19 +75,8 @@ class MultiSegmentIndex(SegmentIndex):
             [shift(s.blocks, i) for i, s in enumerate(self.subs)])
         self.norms = union_all(
             [shift(s.norms, i) for i, s in enumerate(self.subs)])
-        self._cache_hot = cache_hot
-        if cache_hot:
-            # same serving layout as SegmentIndex (r6): persist hash-
-            # partitioned by shard so per-query plans cogroup with no
-            # exchange (term filters preserve the partitioning)
-            self.blocks = self._pin(self.blocks).cache()
-            self.norms = self._pin(self.norms).cache()
         self._has_reindex = any(s._has_reindex for s in self.subs)
-        self._pnorms = None
-        self._stats = None
-        self._dict = None
-        self._term_memo: dict[str, dict | None] = {}
-        self._expand_memo: dict[tuple, list[str]] = {}
+        self._init_serving(cache_hot)
 
     # global (term, df, cf, max_tf): second-stage merge over the
     # members' own merged dictionaries — df sums across databases so

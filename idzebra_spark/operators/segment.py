@@ -789,7 +789,8 @@ def build_index(
         # (5.4 s of a 9.7 s sf1.0 build, noop-isolated); the doc-array
         # shuffle moves the same bytes in ~avgdl× fewer rows. Blocks
         # are byte-identical (same factorize term order, same posting
-        # order, same codecs) — pinned by tests/test_build_parity.
+        # order, same codecs) — pinned by
+        # tests/test_round6.py::test_doc_array_build_kernel_parity.
         doc_toks = src.select(
             "shard", "doc_id",
             tokenize_array(F.col("text"), alphabet).alias("toks"),

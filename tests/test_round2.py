@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 
 from idzebra_spark.operators.boolean import PostingsOps, fielded_term
 from idzebra_spark.operators.segment import build_index
-from idzebra_spark.operators.wand import SegmentIndex, z3958_to_regex
+from idzebra_spark.operators.wand import (
+    SegmentIndex, tree_patterns, z3958_to_regex)
 
 
 @pytest.fixture(scope="module")
@@ -315,6 +316,24 @@ def test_truncation_expansion_bound(idx):
         SegmentIndex.MAX_EXPAND = old
 
 
+def test_wide_pattern_in_batch_keeps_sibling_whole(spark, idx):
+    """A batch holding one pattern past MAX_EXPAND raises naming that
+    pattern; the over-wide pattern never truncates a sibling whose
+    expansion is exactly MAX_EXPAND terms."""
+    old = SegmentIndex.MAX_EXPAND
+    try:
+        SegmentIndex.MAX_EXPAND = 2
+        batch = SegmentIndex(spark, idx.path)
+        with pytest.raises(ValueError, match="contains:'a' expands past"):
+            batch.search_tree_many(
+                {"wide": ("contains", "a"), "ok": ("contains", "eam")}, k=5)
+        alone = SegmentIndex(spark, idx.path).expand("contains", "eam")
+        assert alone == ["dream", "streaming"]
+        assert batch.expand("contains", "eam") == alone
+    finally:
+        SegmentIndex.MAX_EXPAND = old
+
+
 def test_shingles_short_and_empty_docs(spark):
     """Docs with < n tokens produce no shingles (and no crash) on
     every dedup path."""
@@ -390,6 +409,15 @@ def test_expand_scoped_to_body_register(idx):
     assert "lang" + FIELD_SEP + "en" not in body
     lang_terms = idx.expand("prefix", "e", field="lang")
     assert lang_terms == ["lang" + FIELD_SEP + "en"]
+    # batched: both registers resolved in ONE dictionary job, each
+    # pattern still scoped to its own register
+    tree = ("or", [("suffix", "en"), ("prefix", "lang" + FIELD_SEP + "e")])
+    keys = tree_patterns(tree)
+    assert keys == [("suffix", "en", None, 1, None),
+                    ("prefix", "e", "lang", 1, None)]
+    _, exp = SegmentIndex(idx.spark, idx.path).resolve(patterns=keys)
+    assert list(exp[keys[0]]) == body
+    assert list(exp[keys[1]]) == lang_terms
 
 
 @pytest.mark.parametrize("relation,ordered", [

@@ -125,6 +125,12 @@ def test_search_many_facade(spark, sf_dir, tmp_path_factory, seg_idx):
     queries = {
         "flat": "merge OR sort",
         "struct": '(merge OR sort) AND scan NOT "batch batch"',
+        # distinct wildcards; sc* repeats across queries, me* and sl*
+        # sit inside a mixed tree with a phrase
+        "wild": "sc*",
+        "wild_again": "sc* OR window",
+        "wild_and": "cu* AND fast",
+        "mixed": '(me* OR "hash scan") NOT sl*',
     }
     many = zs.search_many(queries, k=5).collect()
     got = {}
@@ -135,6 +141,86 @@ def test_search_many_facade(spark, sf_dir, tmp_path_factory, seg_idx):
         single = [(r["doc_id"], r["score_milli"])
                   for r in zs.search(qs, k=5).collect()]
         assert sorted(got[qid]) == sorted(single), qid
+
+
+def _jobs_in_group(spark, name: str, fn):
+    """(number of Spark jobs ``fn`` ran, its result), counted under a
+    fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _one_wildcard_jobs(spark, path: str) -> int:
+    """Spark jobs of ONE dictionary collect (a lone wildcard on a fresh
+    handle). Adaptive execution runs each shuffle stage of a query as
+    its own job id, so one collect is a few job ids, not one."""
+    from idzebra_spark.operators.wand import SegmentIndex
+
+    idx = SegmentIndex(spark, path)
+    n, terms = _jobs_in_group(spark, "t_r3_one_wildcard",
+                              lambda: idx.expand("prefix", "ro"))
+    assert terms and n >= 1
+    return n
+
+
+def test_search_many_one_dictionary_job(spark, seg_idx):
+    """A batch's term lookups and wildcard expansions (flat and
+    structured queries alike) cost ONE dictionary job, run while the
+    batch is planned — before the kernel job(s); the same batch again
+    costs no dictionary job."""
+    from idzebra_spark.api import ZebraSpark
+
+    one_collect = _one_wildcard_jobs(spark, seg_idx.path)
+    zs = ZebraSpark(spark, seg_idx.path)
+    zs.search("window", k=1).collect()  # load meta + stats first
+    queries = {
+        "w1": "sc*",
+        "w2": "me* OR sort",
+        "w3": "cu* AND fast",
+        "w4": "(wi* OR ha*) NOT slow",
+        "w5": 'fi* OR "hash scan"',
+        "flat": "merge OR data",
+        "and": "spark AND query",
+    }
+    n_dict, df = _jobs_in_group(spark, "t_r3_dict_first",
+                                lambda: zs.search_many(queries, k=5))
+    assert n_dict == one_collect
+    n_kernel, rows = _jobs_in_group(spark, "t_r3_kernel", df.collect)
+    assert n_kernel >= 1 and {r["query_id"] for r in rows} == set(queries)
+    n_again, _ = _jobs_in_group(spark, "t_r3_dict_again",
+                                lambda: zs.search_many(queries, k=5))
+    assert n_again == 0
+
+
+def test_dictionary_memos_are_lru_bounded(spark, seg_idx, monkeypatch):
+    """More distinct patterns (and terms) than the memo cap, resolved
+    in one batched call: one job, the memo holds exactly the cap, and
+    an evicted pattern re-resolves to the same terms."""
+    from idzebra_spark.operators import wand
+
+    one_collect = _one_wildcard_jobs(spark, seg_idx.path)
+    monkeypatch.setattr(wand, "EXPAND_MEMO_MAX", 3)
+    monkeypatch.setattr(wand, "TERM_MEMO_MAX", 3)
+    idx = wand.SegmentIndex(spark, seg_idx.path)
+    pats = [("prefix", p, None, 1, None)
+            for p in ("sc", "me", "cu", "wi", "ha")]
+    terms = ["merge", "sort", "scan", "window", "nosuchtokenanywhere"]
+    n_jobs, (info, exp) = _jobs_in_group(
+        spark, "t_r3_lru", lambda: idx.resolve(terms, pats))
+    assert n_jobs == one_collect
+    assert set(exp) == set(pats) and all(exp.values())
+    assert set(info) == set(terms) and info["nosuchtokenanywhere"] is None
+    assert len(idx._expand_memo) == 3 and len(idx._term_memo) == 3
+    assert pats[0] not in idx._expand_memo  # least recently used
+    assert idx.expand("prefix", "sc") == list(exp[pats[0]])
 
 
 # ---------------------------------------------- bounded streaming fold
