@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from idzebra_spark.meta import IndexMeta
 from idzebra_spark.operators.boolean import PostingsOps
 from idzebra_spark.operators.segment import (
     build_index,
@@ -189,15 +190,7 @@ class ZebraSpark:
                 "batch set instead")
         import shutil
 
-        lineage = self.spark.read.parquet(f"{self.path}/lineage")
-        w_latest = lineage.groupBy("shard").agg(
-            F.max("build_seq").alias("build_seq")
-        )
-        live = {
-            r["batch"]
-            for r in lineage.join(w_latest, ["shard", "build_seq"])
-            .select("batch").distinct().collect()
-        }
+        live = set(IndexMeta(self.spark, self.path).batches)
         self._idx = None  # cached file listings would point at orphans
         removed = []
         for table in ("blocks", "norms", "doc_meta", "dictionary"):
@@ -306,8 +299,9 @@ class ZebraSpark:
         cogrouped jobs total, never one per query; each query's rows
         are identical to ``search(q, k)``. Before either runs, every
         query's dictionary work (flat terms, tree rank terms, wildcard
-        expansions) is resolved in ONE dictionary job, so both plans
-        read only memo hits."""
+        expansions) is resolved in one call — driver-side reads for
+        terms and prefixes, at most one dictionary job for the other
+        wildcard kinds — so both plans read only memo hits."""
         flat_specs: dict[str, dict] = {}
         tree_specs: dict[str, object] = {}
         terms_needed: set[str] = set()
@@ -483,7 +477,7 @@ class ZebraSpark:
             F.sum("df").alias("n_postings"),
             F.sum("cf").alias("n_occurrences"),
         ).collect()[0]
-        n_shards = self.index.shard_batch.count()
+        n_shards = len(self.index.meta.live)
         return {
             "n_docs": int(n_docs),
             "avgdl": float(avgdl),

@@ -1,5 +1,6 @@
-"""Relevance scoring: BM25 (the graft's mandated scorer) and Zebra's
-reference ``rank-1`` formula, both as pure column expressions.
+"""Relevance scoring as pure column expressions: BM25 (the graft's
+mandated scorer) and the integer ``log2i`` that Zebra's reference
+``rank-1`` formula is built from.
 
 BM25 (Robertson/Sparck-Jones, the Lucene-practical variant):
     idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))
@@ -56,24 +57,3 @@ def log2i(col: Column) -> Column:
         .otherwise(F.length(F.bin(col.cast("long"))) - 1)
         .cast("long")
     )
-
-
-def rank1_term_score(tf_col: Column, df_col: Column, weight: int = 34) -> Column:
-    """Per-(doc,term) contribution of Zebra rank-1
-    (/root/reference/index/rank1.c:205: ``(8+log2(tf)) * global_inv * w``
-    with ``global_inv = 32 - log2(df)`` at :142)."""
-    return (
-        (F.lit(8) + log2i(tf_col)) * (F.lit(32) - log2i(df_col)) * F.lit(weight)
-    ).cast("long")
-
-
-def rank1_finalize(
-    sum_col: Column, n_rank_terms: Column, last_pos: Column, n_terms: Column
-) -> Column:
-    """Zebra rank-1 normalization + clamp
-    (/root/reference/index/rank1.c:210-217)."""
-    divisor = n_rank_terms * (
-        F.lit(8) + log2i((last_pos / n_terms).cast("long"))
-    )
-    score = (sum_col / divisor).cast("long")
-    return F.when(score > 1000, F.lit(1000)).otherwise(score)

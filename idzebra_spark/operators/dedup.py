@@ -182,24 +182,6 @@ def minhash_signatures_wide(sh: DataFrame,
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(df: DataFrame, n_hashes: int = N_HASHES, n: int = 3,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, j, minhash) — j in 0..n_hashes-1; minhash_j =
-    min over shingles of hash64(j || ':' || shingle). Tall view of
-    :func:`minhash_signatures_wide` (kept for the oracle contract)."""
-    wide = minhash_signatures_wide(shingles(df, n, text_col, id_col),
-                                   n_hashes)
-    pairs = F.array(*[
-        F.struct(F.lit(j).alias("j"), F.col(f"m{j}").alias("minhash"))
-        for j in range(n_hashes)
-    ])
-    return wide.select(
-        "doc_id", F.explode(pairs).alias("s")
-    ).select("doc_id", F.col("s.j").alias("j"),
-             F.col("s.minhash").alias("minhash"))
-
-
 def minhash_lsh_pairs(df: DataFrame, n_hashes: int = N_HASHES,
                       band_rows: int = BAND_ROWS, n: int = 3,
                       threshold: float = 0.5, text_col: str = "text",

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +44,37 @@ from idzebra_spark.operators.wand import SegmentIndex
 # shard-id stride between member databases — far above any real
 # shard count (2^40 shards × 4096 docs/shard ≈ 4.5e15 docs/db)
 DB_STRIDE = 1 << 40
+
+
+class _MetaUnion:
+    """The members' driver-side metadata readers as one: live pairs
+    with strided shard ids, summed totals, per-term sums of the
+    members' lookups (df and cf add, max_tf takes the max) and the
+    union of their prefix matches."""
+
+    def __init__(self, members):
+        self.members = members
+        self.live = pd.concat(
+            [m.live.assign(shard=m.live["shard"] + i * DB_STRIDE)
+             for i, m in enumerate(members)], ignore_index=True)
+
+    def totals(self) -> tuple[int, int]:
+        n, s = zip(*(m.totals() for m in self.members))
+        return sum(n), sum(s)
+
+    def lookup(self, terms) -> dict[str, dict]:
+        out: dict[str, dict] = {}
+        for m in self.members:
+            for t, d in m.lookup(terms).items():
+                o = out.setdefault(t, {"df": 0, "cf": 0, "max_tf": 0})
+                o["df"] += d["df"]
+                o["cf"] += d["cf"]
+                o["max_tf"] = max(o["max_tf"], d["max_tf"])
+        return out
+
+    def prefix(self, field, pattern, limit) -> set[str]:
+        return set().union(
+            *(m.prefix(field, pattern, limit) for m in self.members))
 
 
 class MultiSegmentIndex(SegmentIndex):
@@ -68,9 +100,9 @@ class MultiSegmentIndex(SegmentIndex):
         def union_all(frames: list[DataFrame]) -> DataFrame:
             return reduce(lambda a, b: a.unionByName(b), frames)
 
-        self.shard_batch = union_all(
-            [shift(s.shard_batch, i) for i, s in enumerate(self.subs)]
-        ).cache()
+        self.meta = _MetaUnion([s.meta for s in self.subs])
+        self.shard_batch = spark.createDataFrame(
+            self.meta.live, "shard long, batch string")
         self.blocks = union_all(
             [shift(s.blocks, i) for i, s in enumerate(self.subs)])
         self.norms = union_all(

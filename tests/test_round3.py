@@ -159,26 +159,27 @@ def _jobs_in_group(spark, name: str, fn):
 
 
 def _one_wildcard_jobs(spark, path: str) -> int:
-    """Spark jobs of ONE dictionary collect (a lone wildcard on a fresh
-    handle). Adaptive execution runs each shuffle stage of a query as
-    its own job id, so one collect is a few job ids, not one."""
+    """Spark jobs of ONE dictionary collect (a lone suffix wildcard on
+    a fresh handle; prefixes and exact terms are read on the driver
+    and run none). Adaptive execution runs each shuffle stage of a
+    query as its own job id, so one collect is a few job ids, not
+    one."""
     from idzebra_spark.operators.wand import SegmentIndex
 
     idx = SegmentIndex(spark, path)
     n, terms = _jobs_in_group(spark, "t_r3_one_wildcard",
-                              lambda: idx.expand("prefix", "ro"))
+                              lambda: idx.expand("suffix", "rge"))
     assert terms and n >= 1
     return n
 
 
 def test_search_many_one_dictionary_job(spark, seg_idx):
-    """A batch's term lookups and wildcard expansions (flat and
-    structured queries alike) cost ONE dictionary job, run while the
-    batch is planned — before the kernel job(s); the same batch again
-    costs no dictionary job."""
+    """A batch's term lookups and prefix wildcard expansions (flat and
+    structured queries alike) run NO dictionary job: they are
+    driver-side reads, made while the batch is planned — before the
+    kernel job(s); the same batch again reads nothing."""
     from idzebra_spark.api import ZebraSpark
 
-    one_collect = _one_wildcard_jobs(spark, seg_idx.path)
     zs = ZebraSpark(spark, seg_idx.path)
     zs.search("window", k=1).collect()  # load meta + stats first
     queries = {
@@ -192,7 +193,7 @@ def test_search_many_one_dictionary_job(spark, seg_idx):
     }
     n_dict, df = _jobs_in_group(spark, "t_r3_dict_first",
                                 lambda: zs.search_many(queries, k=5))
-    assert n_dict == one_collect
+    assert n_dict == 0
     n_kernel, rows = _jobs_in_group(spark, "t_r3_kernel", df.collect)
     assert n_kernel >= 1 and {r["query_id"] for r in rows} == set(queries)
     n_again, _ = _jobs_in_group(spark, "t_r3_dict_again",
@@ -202,16 +203,18 @@ def test_search_many_one_dictionary_job(spark, seg_idx):
 
 def test_dictionary_memos_are_lru_bounded(spark, seg_idx, monkeypatch):
     """More distinct patterns (and terms) than the memo cap, resolved
-    in one batched call: one job, the memo holds exactly the cap, and
-    an evicted pattern re-resolves to the same terms."""
+    in one batched call: the Spark-side patterns cost one collect, the
+    memo holds exactly the cap, and an evicted pattern re-resolves to
+    the same terms. Prefix patterns and exact terms cost no job."""
     from idzebra_spark.operators import wand
 
     one_collect = _one_wildcard_jobs(spark, seg_idx.path)
     monkeypatch.setattr(wand, "EXPAND_MEMO_MAX", 3)
     monkeypatch.setattr(wand, "TERM_MEMO_MAX", 3)
     idx = wand.SegmentIndex(spark, seg_idx.path)
-    pats = [("prefix", p, None, 1, None)
-            for p in ("sc", "me", "cu", "wi", "ha")]
+    pats = [("suffix", "an", None, 1, None), ("contains", "er", None, 1, None),
+            ("suffix", "ge", None, 1, None), ("contains", "in", None, 1, None),
+            ("suffix", "sh", None, 1, None)]
     terms = ["merge", "sort", "scan", "window", "nosuchtokenanywhere"]
     n_jobs, (info, exp) = _jobs_in_group(
         spark, "t_r3_lru", lambda: idx.resolve(terms, pats))
@@ -220,7 +223,14 @@ def test_dictionary_memos_are_lru_bounded(spark, seg_idx, monkeypatch):
     assert set(info) == set(terms) and info["nosuchtokenanywhere"] is None
     assert len(idx._expand_memo) == 3 and len(idx._term_memo) == 3
     assert pats[0] not in idx._expand_memo  # least recently used
-    assert idx.expand("prefix", "sc") == list(exp[pats[0]])
+    assert idx.expand("suffix", "an") == list(exp[pats[0]])
+    fresh = wand.SegmentIndex(spark, seg_idx.path)
+    prefix = [("prefix", p, None, 1, None) for p in ("sc", "me", "cu")]
+    n_read, (info, exp) = _jobs_in_group(
+        spark, "t_r3_read", lambda: fresh.resolve(terms, prefix))
+    assert n_read == 0
+    assert set(exp) == set(prefix) and all(exp.values())
+    assert info["merge"] is not None and info["nosuchtokenanywhere"] is None
 
 
 # ---------------------------------------------- bounded streaming fold
