@@ -27,7 +27,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from idzebra_spark.session import get_spark
-    from idzebra_spark.functions.tokenizer import tokenize, tokenize_array
+    from idzebra_spark.functions.tokenizer import tokenize_array
     from idzebra_spark.operators import segment as seg
     from idzebra_spark.operators.segment import build_index
     from idzebra_spark.operators.wand import SegmentIndex
@@ -69,22 +69,10 @@ def main() -> None:
         seg.content_sha("text", []).alias("sha256"))
     t("build_meta_scan", lambda: noop(meta))
 
-    # old explode+aggregate pipeline (what r6 replaced), for reference
-    toks = tokenize(src, "text", "doc_id").withColumn(
-        "shard", seg.shard_expr(ss))
-    toks = toks.where(F.col("term").isNotNull() & (F.col("term") != ""))
-    tf_rows = toks.groupBy("shard", "term", "doc_id").agg(
-        F.count("*").alias("tf"),
-        F.sort_array(F.collect_list("pos")).alias("positions"))
-    old_blocks = tf_rows.groupBy("shard").applyInPandas(
-        seg._build_shard_blocks(bs, True), seg.BLOCK_SCHEMA)
-    t("build_blocks_old_explode_agg", lambda: noop(old_blocks), reps=2)
-
-    # r6 doc-array pipeline
-    doc_toks = src.select(
-        "shard", "doc_id", tokenize_array(F.col("text")).alias("toks"))
-    new_blocks = doc_toks.groupBy("shard").applyInPandas(
-        seg._build_shard_blocks_from_docs(bs, True), seg.BLOCK_SCHEMA)
+    # the doc-array block pipeline build_index plans
+    new_blocks = seg._doc_arrays(src, None, "ascii", False) \
+        .groupBy("shard").applyInPandas(
+            seg._build_shard_blocks(bs, True), seg.BLOCK_SCHEMA)
     t("build_blocks_doc_array", lambda: noop(new_blocks), reps=2)
 
     # --- serving floor: trivial cogroup over the pinned layout -------

@@ -179,7 +179,7 @@ class ZebraSpark:
         crashed mid-build — invisible to readers either way). Local-FS
         implementation; on object storage this is a lifecycle job."""
         self._require_single_path("vacuum")
-        from idzebra_spark.operators.segment import _local_fs_path
+        from idzebra_spark.meta import _local_fs_path
 
         local = _local_fs_path(self.path)
         if local is None:

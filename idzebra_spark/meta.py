@@ -8,7 +8,9 @@ each parquet row group's term min/max is a page bound. This module
 reads the small metadata tables on the driver with ``pyarrow``:
 
 - ``lineage`` (shard, batch, build_seq) -> the live (shard, batch)
-  pairs, the live batches and the ``has_reindex`` flag;
+  pairs, the live batches, the ``has_reindex`` flag and the next
+  ``build_seq`` (the build, update and compaction writers read their
+  lineage state here too);
 - ``norms`` (shard, batch, n_docs, sum_dl) -> (N, sum of doc lengths);
 - ``dictionary`` (term, df, cf, max_tf) -> exact term lookups, and its
   ``term`` column -> prefix expansions;
@@ -21,6 +23,8 @@ read, and term reads open only the row groups whose term min/max
 overlaps a wanted term or prefix range. Posting payloads
 (``docids_bin``, ``tfs_bin``, ``pos_bin``, ``doclens_bin``) are never
 read. Nothing is cached here; the handle's LRU memos hold the results.
+:meth:`IndexMeta.frame` hands the live rows of a table to Spark with
+a schema it already knows, so no read pays a schema-inference job.
 
 A path ``pyarrow.fs.FileSystem.from_uri`` cannot open (a Hadoop-only
 scheme such as ``s3a://``) gets the same rows from a Spark collect of
@@ -30,19 +34,51 @@ the same columns and filter; the aggregation after the read is shared.
 from __future__ import annotations
 
 import os
+import re
 from bisect import bisect_right
+from functools import cached_property
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
-from pyspark.sql import SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from idzebra_spark.operators.boolean import FIELD_SEP
-from idzebra_spark.operators.segment import _local_fs_path
 
 _PARQUET = ds.ParquetFileFormat()
+
+
+def _local_fs_path(path: str) -> str | None:
+    """The plain filesystem path when ``path`` is local, else None.
+
+    Handles every Hadoop-accepted local spelling — ``/x``,
+    ``file:/x``, ``file:///x`` — and rejects anything with a non-file
+    scheme (``hdfs:/x``, ``s3a://b/x``) or a file URI with an
+    authority (``file://host/x``): those must go through the Spark
+    writer, and returning them verbatim would create a literal
+    ``file:`` directory under the driver's cwd."""
+    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):(.*)$", path)
+    if m is None:
+        return path  # no scheme: a plain local path
+    scheme, rest = m.group(1).lower(), m.group(2)
+    if scheme != "file":
+        return None
+    if rest.startswith("//"):
+        rest = rest[2:]
+        if not rest.startswith("/"):
+            return None  # file://host/x — an authority, not local
+    return rest or None
+
+
+def with_batch(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the ``batch`` partition column."""
+    return T.StructType(
+        schema.fields + [T.StructField("batch", T.StringType())])
 
 
 def _schema(columns: list[str]) -> pa.Schema:
@@ -83,7 +119,17 @@ class IndexMeta:
     ``live`` (pandas shard, batch): the latest committed batch per
     shard. ``batches``: the batches it names. ``has_reindex``: some
     live batch is only partly live (a later reindex superseded some of
-    its shards), so its dictionary partial is stale."""
+    its shards), so its dictionary partial is stale. ``next_seq``: the
+    ``build_seq`` the next committed batch takes."""
+
+    @classmethod
+    def committed(cls, spark: SparkSession, path: str) -> IndexMeta | None:
+        """The metadata of the index at ``path``, or None when no batch
+        is committed there (no lineage table)."""
+        try:
+            return cls(spark, path)
+        except (FileNotFoundError, AnalysisException):
+            return None
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -96,6 +142,7 @@ class IndexMeta:
         self.live = lin.merge(latest, on=["shard", "build_seq"])[
             ["shard", "batch"]].reset_index(drop=True)
         self.batches = sorted(self.live["batch"].unique())
+        self.next_seq = int(lin["build_seq"].max()) + 1 if len(lin) else 0
         rows = lin["batch"].value_counts()
         live_rows = self.live["batch"].value_counts()
         self.has_reindex = bool(
@@ -103,6 +150,35 @@ class IndexMeta:
         self._live_arrow = pa.Table.from_pandas(
             self.live, preserve_index=False).cast(pa.schema(
                 [("shard", pa.int64()), ("batch", pa.string())]))
+
+    @cached_property
+    def shard_batch(self) -> DataFrame:
+        """The live (shard, batch) pairs as a Spark frame."""
+        return self.spark.createDataFrame(self.live,
+                                          "shard long, batch string")
+
+    def frame(self, table: str, schema=None) -> DataFrame:
+        """The live rows of ``table`` as a Spark frame: the table
+        semi-joined to the live (shard, batch) pairs. The read gets
+        ``schema`` (a StructType or DDL string, ``batch`` included),
+        else the schema of one live data file's footer plus ``batch``;
+        Spark infers it (one job) only where pyarrow cannot open the
+        path."""
+        schema = schema or self._file_schema(table)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(f"{self.path}/{table}").join(
+            F.broadcast(self.shard_batch), ["shard", "batch"], "semi")
+
+    def _file_schema(self, table: str) -> T.StructType | None:
+        """Spark schema of a data file of a live batch of ``table``."""
+        if self._fs is None:
+            return None
+        for _, fpath in self._files(table, self.batches):
+            frag = _PARQUET.make_fragment(fpath, filesystem=self._fs)
+            return with_batch(from_arrow_schema(frag.physical_schema))
+        return None
 
     # ------------------------------------------------------ aggregates
 

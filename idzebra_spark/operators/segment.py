@@ -50,9 +50,6 @@ On-disk layout (all parquet, under ``path/``):
 
 from __future__ import annotations
 
-import os
-import time
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +62,8 @@ from idzebra_spark.functions.codec import (
     varint_encode_offsets,
 )
 from idzebra_spark.functions.tokenizer import tokenize, tokenize_array
+from idzebra_spark.meta import IndexMeta, _local_fs_path, with_batch
+from idzebra_spark.operators.boolean import FIELD_SEP
 
 DEFAULT_SHARD_SIZE = 4096
 DEFAULT_BLOCK_SIZE = 128
@@ -103,26 +102,66 @@ NORMS_SCHEMA = T.StructType([
     T.StructField("doclens_bin", T.BinaryType()),
 ])
 
+DICT_DDL = "term string, df long, cf long, max_tf int, n_blocks long"
+
 
 def _build_shard_blocks(block_size: int, store_positions: bool):
-    """Kernel: encode all posting blocks for one shard.
+    """Kernel: encode all posting blocks for one shard from per-DOC
+    arrays ``(shard, doc_id, toks[, pos])`` — Zebra's sorted key run
+    (index/key_block.c:259-308), one per shard.
 
-    Input pdf is PRE-AGGREGATED in the JVM: one row per posting
-    ``(shard, term, doc_id, tf[, positions])`` — the tf groupBy runs
-    with map-side combine and whole-stage codegen, so the Arrow
-    boundary moves ~avgtf× fewer rows and Python only does block
-    chunking + codec calls (vectorized numpy, no per-row Python)."""
+    ``toks`` are a doc's terms and ``pos`` their positions; without a
+    ``pos`` column they are 1..len(toks), the 1-based token indexes
+    ``tokenize`` assigns, so a body-text build shuffles the token array
+    alone. The shuffle moves one row per doc (the same bytes as the
+    text), and the tf/position aggregation is a vectorized factorize +
+    lexsort here: ``factorize(sort=True)`` fixes the term order,
+    postings run in (term, doc) order, and each posting's positions
+    ascend."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame([], columns=[f.name for f in BLOCK_SCHEMA.fields])
         if len(pdf) == 0:
-            return pd.DataFrame([], columns=[f.name for f in BLOCK_SCHEMA.fields])
+            return empty
         shard = int(pdf["shard"].iloc[0])
-        codes, uniques = pd.factorize(pdf["term"], sort=True)
-        doc = pdf["doc_id"].to_numpy(np.int64)
-        tf = pdf["tf"].to_numpy(np.int64)
-        order = np.lexsort((doc, codes))
-        codes, doc, tf = codes[order], doc[order], tf[order]
-        n = len(codes)
+        tok_lists = pdf["toks"].to_numpy()
+        lens = np.fromiter((len(x) for x in tok_lists), np.int64,
+                           count=len(pdf))
+        total = int(lens.sum())
+        if total == 0:
+            return empty
+        doc_all = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
+        if "pos" in pdf:
+            # a null pos (a pretokenized stream's) arrives as NaN
+            pos_all = np.concatenate(pdf["pos"].tolist())
+            if store_positions and np.isnan(pos_all).any():
+                raise ValueError("null pos in the posting stream: "
+                                 "positions cannot be stored")
+            pos_all = pos_all.astype(np.int64)
+        else:
+            starts = np.zeros(lens.size, dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            pos_all = (np.arange(total, dtype=np.int64)
+                       - np.repeat(starts, lens) + 1)
+        flat = np.concatenate([np.asarray(x, dtype=object)
+                               for x in tok_lists])
+        codes_all, uniques = pd.factorize(flat, sort=True)
+        # order occurrences (term, doc, pos): a posting's positions
+        # ascend after the stable lexsort
+        order = np.lexsort((pos_all, doc_all, codes_all))
+        codes_all, doc_all, pos_all = (
+            codes_all[order], doc_all[order], pos_all[order])
+
+        # collapse occurrences → postings: run boundaries of (term, doc)
+        new_post = np.empty(total, dtype=bool)
+        new_post[0] = True
+        new_post[1:] = (codes_all[1:] != codes_all[:-1]) | (
+            doc_all[1:] != doc_all[:-1])
+        p_starts = np.nonzero(new_post)[0]
+        tf = np.diff(np.append(p_starts, total)).astype(np.int64)
+        codes = codes_all[p_starts]
+        doc = doc_all[p_starts]
+        n = codes.size
 
         # position within each term's posting run
         term_change = np.empty(n, dtype=bool)
@@ -152,132 +191,6 @@ def _build_shard_blocks(block_size: int, store_positions: bool):
         dd = np.empty(n, dtype=np.uint64)
         dd[1:] = (doc[1:] - doc[:-1]).astype(np.uint64)
         dd[bs_idx] = doc[bs_idx].astype(np.uint64)  # reset per block
-        dbuf, doff = varint_encode_offsets(dd)
-        tbuf, toff = varint_encode_offsets(tf.astype(np.uint64))
-        docids_bin = [dbuf[doff[s]:doff[e]] for s, e in zip(bs_idx, be_idx)]
-        tfs_bin = [tbuf[toff[s]:toff[e]] for s, e in zip(bs_idx, be_idx)]
-
-        if store_positions:
-            import itertools
-
-            pos_lists = pdf["positions"].to_numpy()[order]
-            total = int(tf.sum())
-            # one C-level iteration over the flattened lists — not a
-            # Python np.asarray per posting row
-            p = np.fromiter(
-                itertools.chain.from_iterable(pos_lists),
-                dtype=np.int64, count=total,
-            ) if n else np.empty(0, np.int64)
-            tok_start = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(tf, out=tok_start[1:])
-            pdelta = np.empty(p.size, dtype=np.uint64)
-            if p.size:
-                pdelta[1:] = (p[1:] - p[:-1]).astype(np.uint64)
-                starts = tok_start[:-1]
-                pdelta[starts] = p[starts].astype(np.uint64)  # reset per doc
-            pbuf, poff = varint_encode_offsets(pdelta)
-            pos_bin = [
-                pbuf[poff[tok_start[s]]:poff[tok_start[e]]]
-                for s, e in zip(bs_idx, be_idx)
-            ]
-        else:
-            pos_bin = [b""] * len(bs_idx)
-
-        return pd.DataFrame({
-            "term": terms,
-            "shard": np.full(len(bs_idx), shard, dtype=np.int64),
-            "block_seq": block_seq,
-            "n_docs": n_docs,
-            "first_docid": first,
-            "last_docid": last,
-            "max_tf": max_tf,
-            "sum_tf": sum_tf,
-            "docids_bin": docids_bin,
-            "tfs_bin": tfs_bin,
-            "pos_bin": pos_bin,
-        })
-
-    return fn
-
-
-def _build_shard_blocks_from_docs(block_size: int, store_positions: bool):
-    """Kernel: encode all posting blocks for one shard straight from
-    per-DOC token arrays ``(shard, doc_id, toks)``.
-
-    The r6 replacement for the explode → groupBy(shard, term, doc_id)
-    → collect_list(sort_array) pipeline that fed
-    :func:`_build_shard_blocks`: the posting-level aggregation (one
-    shuffled row per occurrence, one collect_list array per posting)
-    was the single most expensive build stage (measured 5.4 s of a
-    9.7 s sf1.0 build as a noop). Here the shuffle moves one row per
-    DOC (the token array — the same bytes as the text), and the
-    tf/position aggregation is a vectorized factorize + lexsort in the
-    kernel. Output blocks are byte-identical: the same
-    ``factorize(sort=True)`` term order, the same (term, doc) posting
-    order, and positions are 1-based token indexes exactly as
-    ``tokenize`` assigns them."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame([], columns=[f.name for f in BLOCK_SCHEMA.fields])
-        shard = int(pdf["shard"].iloc[0])
-        tok_lists = pdf["toks"].to_numpy()
-        lens = np.fromiter((len(x) for x in tok_lists), np.int64,
-                           count=len(pdf))
-        total = int(lens.sum())
-        if total == 0:
-            return pd.DataFrame([], columns=[f.name for f in BLOCK_SCHEMA.fields])
-        doc_all = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
-        starts = np.zeros(lens.size, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        # 1-based position within the doc (tokenize's posexplode + 1)
-        pos_all = (np.arange(total, dtype=np.int64)
-                   - np.repeat(starts, lens) + 1)
-        flat = np.concatenate([np.asarray(x, dtype=object)
-                               for x in tok_lists])
-        codes_all, uniques = pd.factorize(flat, sort=True)
-        # order postings (term, doc, pos); pos is ascending within
-        # (term, doc) after the stable lexsort, which is exactly the
-        # sort_array(collect_list(pos)) the aggregate form produced
-        order = np.lexsort((pos_all, doc_all, codes_all))
-        codes_all, doc_all, pos_all = (
-            codes_all[order], doc_all[order], pos_all[order])
-
-        # collapse occurrences → postings: run boundaries of (term, doc)
-        new_post = np.empty(total, dtype=bool)
-        new_post[0] = True
-        new_post[1:] = (codes_all[1:] != codes_all[:-1]) | (
-            doc_all[1:] != doc_all[:-1])
-        p_starts = np.nonzero(new_post)[0]
-        tf = np.diff(np.append(p_starts, total)).astype(np.int64)
-        codes = codes_all[p_starts]
-        doc = doc_all[p_starts]
-        n = codes.size
-
-        # from here the block assembly is identical to
-        # _build_shard_blocks (same metadata, same codecs)
-        term_change = np.empty(n, dtype=bool)
-        term_change[0] = True
-        term_change[1:] = codes[1:] != codes[:-1]
-        term_starts_all = np.nonzero(term_change)[0]
-        idx_in_term = np.arange(n, dtype=np.int64) - np.repeat(
-            term_starts_all, np.diff(np.append(term_starts_all, n))
-        )
-        is_bs = (idx_in_term % block_size) == 0
-        bs_idx = np.nonzero(is_bs)[0]
-        be_idx = np.append(bs_idx[1:], n)
-
-        n_docs = (be_idx - bs_idx).astype(np.int32)
-        first = doc[bs_idx]
-        last = doc[be_idx - 1]
-        max_tf = np.maximum.reduceat(tf, bs_idx).astype(np.int32)
-        sum_tf = np.add.reduceat(tf, bs_idx)
-        block_seq = (idx_in_term[bs_idx] // block_size).astype(np.int32)
-        terms = np.asarray(uniques, dtype=object)[codes[bs_idx]]
-
-        dd = np.empty(n, dtype=np.uint64)
-        dd[1:] = (doc[1:] - doc[:-1]).astype(np.uint64)
-        dd[bs_idx] = doc[bs_idx].astype(np.uint64)
         dbuf, doff = varint_encode_offsets(dd)
         tbuf, toff = varint_encode_offsets(tf.astype(np.uint64))
         docids_bin = [dbuf[doff[s]:doff[e]] for s, e in zip(bs_idx, be_idx)]
@@ -382,8 +295,6 @@ def fielded_postings(src: DataFrame,
     token, field-local positions), 'p' = complete-field (the whole
     normalized value is ONE token at pos 1,
     /root/reference/index/extract.c:1723-1731)."""
-    from idzebra_spark.operators.boolean import FIELD_SEP
-
     parts = [tokenize(src, text_col, id_col, alphabet)]
     for col in fields.get("w", []):
         parts.append(
@@ -410,21 +321,68 @@ def fielded_postings(src: DataFrame,
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
+def _doc_arrays(src: DataFrame, fields: dict[str, list[str]] | None,
+                alphabet, pretokenized: bool) -> DataFrame:
+    """Per-doc block-kernel input ``(shard, doc_id, toks[, pos])`` of a
+    build source: the occurrences :func:`fielded_postings` (or a
+    pretokenized stream) would emit, gathered per doc on the JVM side.
+
+    - body text: the token array; positions are implicit (1..len);
+    - ``fields=``: the body tokens, then each 'w' field's tokens keyed
+      ``field\x1fterm`` at field-local positions 1..len, then each
+      non-empty 'p' field's joined value at position 1;
+    - ``pretokenized``: one groupBy(shard, doc_id) collecting the
+      stream's (term, pos) pairs, a non-empty ``field`` prefixing its
+      term. Null and empty terms are dropped (pandas factorize would
+      code a null -1 and negative-index the term array)."""
+    if pretokenized:
+        term = F.when(
+            F.col("field").isNotNull() & (F.col("field") != ""),
+            F.concat(F.col("field"), F.lit(FIELD_SEP), F.col("term")),
+        ).otherwise(F.col("term"))
+        occ = src.select("shard", "doc_id", term.alias("term"), "pos") \
+            .where(F.col("term").isNotNull() & (F.col("term") != ""))
+        return occ.groupBy("shard", "doc_id").agg(
+            F.collect_list(F.struct("term", "pos")).alias("occ"),
+        ).select("shard", "doc_id",
+                 F.transform("occ", lambda o: o["term"]).alias("toks"),
+                 F.transform("occ", lambda o: o["pos"]).alias("pos"))
+    body = tokenize_array(F.col("text"), alphabet)
+    if not fields:
+        return src.select("shard", "doc_id", body.alias("toks"))
+    w, p = fields.get("w", []), fields.get("p", [])
+    no_toks = F.array().cast("array<string>")
+    # one projection computes each array once; the next one reads
+    # each array twice (its terms and its positions)
+    arrs = src.select(
+        "shard", "doc_id", body.alias("_b"),
+        *[F.coalesce(tokenize_array(F.col(c), alphabet), no_toks)
+          .alias(f"_w{i}") for i, c in enumerate(w)],
+        *[F.array_join(tokenize_array(F.col(c), alphabet), " ")
+          .alias(f"_p{i}") for i, c in enumerate(p)],
+    )
+    # field-local 1-based positions (sequence(1, 0) would count down)
+    toks, pos = [F.col("_b")], [F.transform("_b", lambda x, k: k + 1)]
+    for i, c in enumerate(w):
+        key = F.lit(c + FIELD_SEP)
+        toks.append(F.transform(f"_w{i}", lambda t: F.concat(key, t)))
+        pos.append(F.transform(f"_w{i}", lambda x, k: k + 1))
+    for i, c in enumerate(p):
+        v = F.col(f"_p{i}")
+        # an empty/absent value must NOT become the phantom term
+        # 'field\x1f' (the bare composite prefix is non-empty)
+        toks.append(F.when(v != "", F.array(F.concat(F.lit(c + FIELD_SEP), v)))
+                    .otherwise(no_toks))
+        pos.append(F.when(v != "", F.array(F.lit(1)))
+                   .otherwise(F.array().cast("array<int>")))
+    return arrs.select("shard", "doc_id", F.concat(*toks).alias("toks"),
+                       F.concat(*pos).alias("pos"))
+
+
 def _field_cols(fields: dict[str, list[str]] | None) -> list[str]:
     if not fields:
         return []
     return sorted({c for cols in fields.values() for c in cols})
-
-
-def _lineage_path(path: str) -> str:
-    return f"{path}/lineage"
-
-
-def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(_lineage_path(path))
-    except Exception:
-        return None
 
 
 def _alphabet_to_meta(alphabet):
@@ -445,30 +403,6 @@ def _alphabet_from_meta(m):
 
     return Charmap(m["value_set"], m["case_src"], m["case_dst"],
                    tuple(tuple(p) for p in m["replaces"]))
-
-
-def _local_fs_path(path: str) -> str | None:
-    """The plain filesystem path when ``path`` is local, else None.
-
-    Handles every Hadoop-accepted local spelling — ``/x``,
-    ``file:/x``, ``file:///x`` — and rejects anything with a non-file
-    scheme (``hdfs:/x``, ``s3a://b/x``) or a file URI with an
-    authority (``file://host/x``): those must go through the Spark
-    writer, and returning them verbatim would create a literal
-    ``file:`` directory under the driver's cwd."""
-    import re
-
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):(.*)$", path)
-    if m is None:
-        return path  # no scheme: a plain local path
-    scheme, rest = m.group(1).lower(), m.group(2)
-    if scheme != "file":
-        return None
-    if rest.startswith("//"):
-        rest = rest[2:]
-        if not rest.startswith("/"):
-            return None  # file://host/x — an authority, not local
-    return rest or None
 
 
 def write_build_meta(spark: SparkSession, path: str, **params) -> None:
@@ -544,6 +478,35 @@ def read_build_meta(spark: SparkSession, path: str) -> dict | None:
         return None
 
 
+def _batch_blocks(spark: SparkSession, path: str, batch: str) -> DataFrame:
+    """The blocks one batch wrote, read back with their known schema."""
+    return spark.read.schema(with_batch(BLOCK_SCHEMA)) \
+        .parquet(f"{path}/blocks").where(F.col("batch") == batch)
+
+
+def _write_dictionary(blocks: DataFrame, path: str, batch: str) -> None:
+    """Write a batch's dictionary partial — per-term totals of its
+    ``blocks`` (the second-stage merge across batches happens at
+    load/query time, as kinput.c's heap merge). Range-partitioned and
+    sorted by term, so every file's row groups are term-bounded and
+    the driver-side reader prunes them by term min/max."""
+    (
+        blocks.groupBy("term")
+        .agg(
+            F.sum("n_docs").alias("df"),
+            F.sum("sum_tf").alias("cf"),
+            F.max("max_tf").alias("max_tf"),
+            F.count("*").alias("n_blocks"),
+        )
+        .withColumn("batch", F.lit(batch))
+        .repartitionByRange(8, "term")
+        .sortWithinPartitions("term")
+        .write.mode("append")
+        .partitionBy("batch")
+        .parquet(f"{path}/dictionary")
+    )
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -614,12 +577,8 @@ def build_index(
 
     Returns build metrics for the batch.
     """
-    lineage = read_lineage(spark, path)
-    build_seq = 0
-    done_shards = None
-    if lineage is not None:
-        build_seq = lineage.agg(F.max("build_seq")).collect()[0][0] + 1
-        done_shards = lineage.select("shard").distinct()
+    committed = IndexMeta.committed(spark, path)
+    build_seq = 0 if committed is None else committed.next_seq
     batch = f"b{build_seq:05d}"
 
     # Register-config guard: a committed index can only be extended
@@ -634,7 +593,7 @@ def build_index(
     # only correct ways to change config are a fresh path or deleting
     # the index; this error says so instead of corrupting.
     existing_meta = read_build_meta(spark, path)
-    if existing_meta and lineage is not None:
+    if existing_meta and committed is not None:
         import json as _json
 
         want = {"shard_size": shard_size, "block_size": block_size,
@@ -699,8 +658,10 @@ def build_index(
             reindex_df = spark.createDataFrame(
                 [(int(s),) for s in reindex_shards], "shard long")
         src = src.join(reindex_df, "shard", "semi")
-    elif resume and done_shards is not None:
-        src = src.join(done_shards, "shard", "left_anti")
+    elif resume and committed is not None:
+        # every shard in lineage is done (each has a live batch)
+        src = src.join(F.broadcast(committed.shard_batch.select("shard")),
+                       "shard", "left_anti")
     if fail_after_shards is not None:
         keep = [
             r["shard"]
@@ -712,19 +673,8 @@ def build_index(
     if src.isEmpty() and reindex_shards is None:
         return {"batch": None, "shards": 0, "docs": 0}
 
-    verbose = os.environ.get("IDZEBRA_BUILD_VERBOSE") == "1"
-    _t = time.perf_counter()
-
-    def tick(stage: str) -> None:
-        nonlocal _t
-        if verbose:
-            now = time.perf_counter()
-            print(f"[build {batch}] {stage}: {now - _t:.2f}s", flush=True)
-            _t = now
-
     if cache_source:
         src = src.cache()
-    tick("plan")
     _to_unpersist: list[DataFrame] = []
 
     # doc_meta: per-row sha256 invariant + doclen — ONE scan, no join
@@ -772,59 +722,14 @@ def build_index(
         .applyInPandas(_build_norms, NORMS_SCHEMA)
     )
 
-    # posting blocks. Stage 1 (JVM, codegen + map-side combine):
-    # tokens → (shard, term, doc_id, tf[, positions]) — the partial
-    # aggregation shrinks the shuffle by ~avg-tf and keeps the heavy
-    # lifting out of Python. Stage 2: balanced regroup by shard, one
-    # vectorized encode kernel per shard. Written range-partitioned +
+    # posting blocks: one row per doc — (shard, doc_id, toks[, pos]) —
+    # shuffled to its shard, where one vectorized kernel aggregates tf
+    # and positions and encodes the blocks. Written range-partitioned +
     # sorted by term so query-term predicates prune files via parquet
     # min/max stats.
-    if not pretokenized and not fields:
-        # r6 fast path (the common body-text build): shuffle ONE row
-        # per doc — (shard, doc_id, token array) — and do the whole
-        # tf/position aggregation inside the shard kernel (factorize +
-        # lexsort, vectorized). The occurrence-level explode and the
-        # groupBy(shard, term, doc_id) collect_list(sort_array)
-        # aggregation it replaced were the most expensive build stage
-        # (5.4 s of a 9.7 s sf1.0 build, noop-isolated); the doc-array
-        # shuffle moves the same bytes in ~avgdl× fewer rows. Blocks
-        # are byte-identical (same factorize term order, same posting
-        # order, same codecs) — pinned by
-        # tests/test_round6.py::test_doc_array_build_kernel_parity.
-        doc_toks = src.select(
-            "shard", "doc_id",
-            tokenize_array(F.col("text"), alphabet).alias("toks"),
-        )
-        blocks = doc_toks.groupBy("shard").applyInPandas(
-            _build_shard_blocks_from_docs(block_size, store_positions),
-            BLOCK_SCHEMA,
-        )
-    else:
-        if pretokenized:
-            from idzebra_spark.operators.boolean import FIELD_SEP
-
-            toks = src.select(
-                "doc_id",
-                F.when(
-                    F.col("field").isNotNull() & (F.col("field") != ""),
-                    F.concat(F.col("field"), F.lit(FIELD_SEP), F.col("term")),
-                ).otherwise(F.col("term")).alias("term"),
-                "pos",
-            )
-        else:
-            toks = fielded_postings(src, fields, alphabet)
-        toks = toks.withColumn("shard", shard_expr(shard_size))
-        aggs = [F.count("*").alias("tf")]
-        if store_positions:
-            aggs.append(F.sort_array(F.collect_list("pos")).alias("positions"))
-        # drop null/empty terms (a null 'p' field value yields term=NULL;
-        # pandas factorize would code it -1 and negative-index the uniques
-        # array, silently corrupting the last term's blocks)
-        toks = toks.where(F.col("term").isNotNull() & (F.col("term") != ""))
-        tf_rows = toks.groupBy("shard", "term", "doc_id").agg(*aggs)
-        blocks = tf_rows.groupBy("shard").applyInPandas(
-            _build_shard_blocks(block_size, store_positions), BLOCK_SCHEMA
-        )
+    blocks = _doc_arrays(src, fields, alphabet, pretokenized) \
+        .groupBy("shard").applyInPandas(
+            _build_shard_blocks(block_size, store_positions), BLOCK_SCHEMA)
 
     # the three pre-commit writes are independent — submit them as
     # concurrent Spark jobs (local scheduler interleaves tasks, keeping
@@ -867,38 +772,19 @@ def build_index(
         futs = [ex.submit(w) for w in (w_meta, w_norms, w_blocks)]
         for f in futs:
             f.result()
-    tick("meta+norms+blocks")
 
     # read back what was written: validates readability and gives true
     # byte accounting for lineage metrics. Cached — three aggregations
     # (dictionary, per-shard metrics, totals) share one scan.
     written = (
-        spark.read.parquet(f"{path}/blocks")
-        .where(F.col("batch") == batch)
+        _batch_blocks(spark, path, batch)
         .select("term", "shard", "n_docs", "sum_tf", "max_tf",
                 F.length("docids_bin").alias("len_d"),
                 F.length("tfs_bin").alias("len_t"),
                 F.length("pos_bin").alias("len_p"))
         .cache()
     )
-
-    # dictionary partial (second-stage merge happens at load/query time)
-    (
-        written.groupBy("term")
-        .agg(
-            F.sum("n_docs").alias("df"),
-            F.sum("sum_tf").alias("cf"),
-            F.max("max_tf").alias("max_tf"),
-            F.count("*").alias("n_blocks"),
-        )
-        .withColumn("batch", F.lit(batch))
-        .repartitionByRange(8, "term")
-        .sortWithinPartitions("term")
-        .write.mode("append")
-        .partitionBy("batch")
-        .parquet(f"{path}/dictionary")
-    )
-    tick("dictionary")
+    _write_dictionary(written, path, batch)
 
     # (no separate stats table: SegmentIndex derives N/avgdl from the
     # per-shard norms rows, which stay exact across shard reindexes)
@@ -924,11 +810,6 @@ def build_index(
         .withColumn("batch", F.lit(batch))
         .withColumn("build_seq", F.lit(build_seq))
     ).cache()
-    # Materialize metrics BEFORE the lineage append: lineage_rows'
-    # plan (via `src`) anti-joins a lazy read of the lineage parquet,
-    # so evaluating it after the append would see this very batch as
-    # already done and produce empty output. The cache also pins the
-    # rows the append writes.
     out = lineage_rows.agg(
         F.count("*").alias("shards"),
         F.sum("docs_indexed").alias("docs"),
@@ -943,8 +824,7 @@ def build_index(
                      store_positions=store_positions, fields=fields,
                      alphabet=_alphabet_to_meta(alphabet),
                      pretokenized=pretokenized, match_cols=match_cols)
-    lineage_rows.write.mode("append").parquet(_lineage_path(path))
-    tick("lineage")
+    lineage_rows.write.mode("append").parquet(f"{path}/lineage")
     lineage_rows.unpersist()
     written.unpersist()
     for df in _to_unpersist:
@@ -967,60 +847,41 @@ def compact_index(spark: SparkSession, path: str) -> dict:
     batch id, recomputes the dictionary partial, and commits via
     lineage — readers before/after see identical data. Old batches
     become orphans (droppable by a GC sweep)."""
-    lineage = spark.read.parquet(_lineage_path(path))
-    build_seq = lineage.agg(F.max("build_seq")).collect()[0][0] + 1
+    committed = IndexMeta(spark, path)
+    build_seq = committed.next_seq
     batch = f"b{build_seq:05d}"
-    w_latest = lineage.groupBy("shard").agg(F.max("build_seq").alias("build_seq"))
-    live = lineage.join(w_latest, ["shard", "build_seq"]).select("shard", "batch")
 
-    def rewrite(table: str, sort_cols: list[str] | None = None) -> None:
-        df = (
-            spark.read.parquet(f"{path}/{table}")
-            .join(F.broadcast(live), ["shard", "batch"], "semi")
-            .drop("batch")
+    def rewrite(table: str, schema=None,
+                sort_cols: list[str] | None = None) -> None:
+        df = committed.frame(table, schema).drop("batch") \
             .withColumn("batch", F.lit(batch))
-        )
         if sort_cols:
             df = df.repartitionByRange(
                 max(spark.sparkContext.defaultParallelism, 8), sort_cols[0]
             ).sortWithinPartitions(*sort_cols)
         df.write.mode("append").partitionBy("batch").parquet(f"{path}/{table}")
 
-    rewrite("blocks", ["term", "shard", "block_seq"])
-    rewrite("norms")
+    rewrite("blocks", with_batch(BLOCK_SCHEMA), ["term", "shard", "block_seq"])
+    rewrite("norms", with_batch(NORMS_SCHEMA))
     rewrite("doc_meta")
-
-    written = spark.read.parquet(f"{path}/blocks").where(F.col("batch") == batch)
-    (
-        written.groupBy("term")
-        .agg(
-            F.sum("n_docs").alias("df"),
-            F.sum("sum_tf").alias("cf"),
-            F.max("max_tf").alias("max_tf"),
-            F.count("*").alias("n_blocks"),
-        )
-        .withColumn("batch", F.lit(batch))
-        .write.mode("append").partitionBy("batch")
-        .parquet(f"{path}/dictionary")
-    )
+    _write_dictionary(_batch_blocks(spark, path, batch), path, batch)
 
     # commit: carry the live shards' metrics forward under the new seq
-    new_lineage = (
-        lineage.join(w_latest, ["shard", "build_seq"])
-        .drop("batch", "build_seq")
-        .withColumn("batch", F.lit(batch))
-        .withColumn("build_seq", F.lit(build_seq))
-    ).cache()
-    n = new_lineage.count()
-    new_lineage.write.mode("append").parquet(_lineage_path(path))
-    new_lineage.unpersist()
-    return {"batch": batch, "shards": n}
+    committed.frame("lineage", "shard long, docs_indexed long, "
+                    "postings_emitted long, bytes_compressed long, "
+                    "batch string, build_seq int") \
+        .drop("batch", "build_seq") \
+        .withColumn("batch", F.lit(batch)) \
+        .withColumn("build_seq", F.lit(build_seq)) \
+        .write.mode("append").parquet(f"{path}/lineage")
+    return {"batch": batch, "shards": len(committed.live)}
 
 
 def _update_by_match_key(
     spark: SparkSession,
     new_corpus: DataFrame,
     path: str,
+    committed: IndexMeta,
     *,
     text_col: str,
     id_col: str,
@@ -1061,16 +922,6 @@ def _update_by_match_key(
     from pyspark.sql.window import Window
 
     meta = read_build_meta(spark, path) or {}
-    lineage = read_lineage(spark, path)
-    if lineage is None:
-        m = build_index(
-            spark, new_corpus, path, text_col=text_col, id_col=id_col,
-            shard_size=shard_size, block_size=block_size,
-            store_positions=store_positions, fields=fields,
-            alphabet=alphabet, match_cols=match_cols,
-        )
-        m["changed_shards"] = m["shards"]
-        return m
     if meta.get("match_cols") != match_cols:
         raise ValueError(
             "match_cols update on an index built without them (or with "
@@ -1097,13 +948,8 @@ def _update_by_match_key(
     )
 
     # 2. indexed side: latest-batch doc_meta with canonical-per-key
-    w_latest = lineage.groupBy("shard").agg(
-        F.max("build_seq").alias("build_seq"))
-    latest = lineage.join(w_latest, ["shard", "build_seq"]) \
-        .select("shard", "batch")
     old = (
-        spark.read.parquet(f"{path}/doc_meta")
-        .join(latest, ["shard", "batch"], "semi")
+        committed.frame("doc_meta")
         .select("doc_id", "match_key",
                 F.col("sha256").alias("old_sha"),
                 F.col("shard").alias("old_shard"))
@@ -1129,36 +975,33 @@ def _update_by_match_key(
         .union(dupes.select(F.col("old_shard").alias("shard")))
         .distinct()
     )
-    changed = changed.persist()
-    n_changed = changed.count()
-    if n_changed == 0:
-        changed.unpersist()
-        return {"batch": None, "shards": 0, "docs": 0, "changed_shards": 0}
-
     # 4. remap the snapshot to effective ids and rebuild changed shards
     mapping = j.where(F.col("new_id").isNotNull()).select(
         "match_key", eff.alias("_eff_id"))
-    # Identity guard: a NEW key enters under its own external id, which
-    # may equal the live internal id (sysno) of a DIFFERENT surviving
-    # key when external ids are recycled across crawls — the remapped
-    # snapshot would then carry two rows per doc_id and corrupt the
-    # rebuilt shard's doc_meta/norms/scoring. Each surviving key maps
-    # to its own distinct stored doc_id, so ANY duplicate effective id
-    # is such a collision (new-vs-surviving or new-vs-new); an id
-    # freed by a key deleted in this same sync produces no duplicate
-    # and stays allowed. One index-sized aggregation, never collected.
-    dup = (mapping.groupBy("_eff_id").agg(F.count("*").alias("n"))
-           .where(F.col("n") > 1).limit(1).count())
-    if dup:
-        changed.unpersist()
-        raise ValueError(
-            "match-key update id collision: an incoming NEW match key "
-            "reuses the external id of a different live record (or two "
-            "new keys share one id). Reassign fresh external ids to "
-            "the colliding records — silently merging two logical "
-            "records under one internal doc_id would corrupt the "
-            "register (reference semantics: extract.c:927-1000 keeps "
-            "sysno unique per match key).")
+
+    def check_ids() -> None:
+        # Identity guard: a NEW key enters under its own external id,
+        # which may equal the live internal id (sysno) of a DIFFERENT
+        # surviving key when external ids are recycled across crawls —
+        # the remapped snapshot would then carry two rows per doc_id
+        # and corrupt the rebuilt shard's doc_meta/norms/scoring. Each
+        # surviving key maps to its own distinct stored doc_id, so ANY
+        # duplicate effective id is such a collision (new-vs-surviving
+        # or new-vs-new); an id freed by a key deleted in this same
+        # sync produces no duplicate and stays allowed. One index-sized
+        # aggregation, never collected.
+        dup = (mapping.groupBy("_eff_id").agg(F.count("*").alias("n"))
+               .where(F.col("n") > 1).limit(1).count())
+        if dup:
+            raise ValueError(
+                "match-key update id collision: an incoming NEW match "
+                "key reuses the external id of a different live record "
+                "(or two new keys share one id). Reassign fresh external "
+                "ids to the colliding records — silently merging two "
+                "logical records under one internal doc_id would corrupt "
+                "the register (reference semantics: extract.c:927-1000 "
+                "keeps sysno unique per match key).")
+
     remapped = (
         newc.join(mapping, newc["_mk"] == mapping["match_key"])
         .select(
@@ -1168,13 +1011,32 @@ def _update_by_match_key(
               dict.fromkeys([*fcols, *match_cols])],
         )
     )
-    m = build_index(
-        spark, remapped, path, text_col=text_col, id_col=id_col,
-        shard_size=shard_size, block_size=block_size,
-        store_positions=store_positions, reindex_shards=changed,
-        fields=fields, alphabet=alphabet, match_cols=match_cols,
-    )
-    changed.unpersist()
+    return _rebuild_changed(
+        spark, changed, remapped, path, check_ids, text_col=text_col,
+        id_col=id_col, shard_size=shard_size, block_size=block_size,
+        store_positions=store_positions, fields=fields,
+        alphabet=alphabet, match_cols=match_cols)
+
+
+def _rebuild_changed(spark: SparkSession, changed: DataFrame,
+                     corpus: DataFrame, path: str, check=None,
+                     **build_kw) -> dict:
+    """Rebuild the ``changed`` shards (a ``shard`` frame) from
+    ``corpus`` in one batch, after ``check()`` when given; nothing
+    when no shard changed. ``changed`` is cached: the count, the
+    rebuild's shard filter and its tombstones all read it."""
+    changed = changed.persist()
+    try:
+        n_changed = changed.count()
+        if n_changed == 0:
+            return {"batch": None, "shards": 0, "docs": 0,
+                    "changed_shards": 0}
+        if check is not None:
+            check()
+        m = build_index(spark, corpus, path, reindex_shards=changed,
+                        **build_kw)
+    finally:
+        changed.unpersist()
     m["changed_shards"] = n_changed
     return m
 
@@ -1240,19 +1102,29 @@ def update_index(
         fields = meta["fields"]
     if match_cols is None and meta.get("match_cols"):
         match_cols = meta["match_cols"]
-    fcols = _field_cols(fields)
-    if match_cols:
-        if candidate_shards is not None:
-            raise ValueError(
-                "candidate_shards cannot bound a match_cols update: "
-                "the effective doc_id (and so the touched shard) of an "
-                "incoming record is resolved by match key, not by its "
-                "own doc_id")
-        return _update_by_match_key(
+    if match_cols and candidate_shards is not None:
+        raise ValueError(
+            "candidate_shards cannot bound a match_cols update: "
+            "the effective doc_id (and so the touched shard) of an "
+            "incoming record is resolved by match key, not by its "
+            "own doc_id")
+    committed = IndexMeta.committed(spark, path)
+    if committed is None:
+        m = build_index(
             spark, new_corpus, path, text_col=text_col, id_col=id_col,
             shard_size=shard_size, block_size=block_size,
             store_positions=store_positions, fields=fields,
+            alphabet=alphabet, match_cols=match_cols,
+        )
+        m["changed_shards"] = m["shards"]
+        return m
+    if match_cols:
+        return _update_by_match_key(
+            spark, new_corpus, path, committed, text_col=text_col,
+            id_col=id_col, shard_size=shard_size, block_size=block_size,
+            store_positions=store_positions, fields=fields,
             alphabet=alphabet, match_cols=match_cols)
+    fcols = _field_cols(fields)
     src = new_corpus.select(
         F.col(id_col).alias("doc_id"),
         content_sha(text_col, fcols).alias("sha256"),
@@ -1260,27 +1132,13 @@ def update_index(
     ).withColumn("shard", shard_expr(shard_size))
     # (content_sha coalesces null text to '' — same as build_index)
 
-    lineage = read_lineage(spark, path)
-    if lineage is None:
-        m = build_index(
-            spark, new_corpus, path, text_col=text_col, id_col=id_col,
-            shard_size=shard_size, block_size=block_size,
-            store_positions=store_positions, fields=fields,
-            alphabet=alphabet,
-        )
-        m["changed_shards"] = m["shards"]
-        return m
-
     cand: DataFrame | None = None
     if candidate_shards is not None:
         cand = candidate_shards.select(
             F.col("shard").cast("long")).distinct()
         src = src.join(F.broadcast(cand), "shard", "semi")
 
-    w_latest = lineage.groupBy("shard").agg(F.max("build_seq").alias("build_seq"))
-    latest = lineage.join(w_latest, ["shard", "build_seq"]).select("shard", "batch")
-    old = spark.read.parquet(f"{path}/doc_meta").join(
-        latest, ["shard", "batch"], "semi")
+    old = committed.frame("doc_meta")
     if cand is not None:
         # bound the indexed-side read too: only candidate shards are
         # diffed (the semi-join precedes the doc_id-level comparison)
@@ -1297,20 +1155,7 @@ def update_index(
         .select(F.coalesce(F.col("shard"), F.col("old_shard")).alias("shard"))
         .distinct()
     )
-    # Materialize NOW (cache + count): the plan reads doc_meta, which
-    # build_index is about to append to — evaluating lazily inside the
-    # rebuild would see the new batch and change the answer.
-    changed = changed.persist()
-    n_changed = changed.count()
-    if n_changed == 0:
-        changed.unpersist()
-        return {"batch": None, "shards": 0, "docs": 0, "changed_shards": 0}
-    m = build_index(
-        spark, new_corpus, path, text_col=text_col, id_col=id_col,
-        shard_size=shard_size, block_size=block_size,
-        store_positions=store_positions, reindex_shards=changed,
-        fields=fields, alphabet=alphabet,
-    )
-    changed.unpersist()
-    m["changed_shards"] = n_changed
-    return m
+    return _rebuild_changed(
+        spark, changed, new_corpus, path, text_col=text_col,
+        id_col=id_col, shard_size=shard_size, block_size=block_size,
+        store_positions=store_positions, fields=fields, alphabet=alphabet)

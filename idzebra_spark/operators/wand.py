@@ -40,9 +40,10 @@ from pyspark.sql.window import Window
 
 from idzebra_spark.functions.codec import varint_decode, delta_varint_decode
 from idzebra_spark.functions.scoring import K1, B
-from idzebra_spark.meta import IndexMeta
+from idzebra_spark.meta import IndexMeta, with_batch
 from idzebra_spark.operators.boolean import FIELD_SEP
-from idzebra_spark.operators.segment import BLOCK_SCHEMA, NORMS_SCHEMA
+from idzebra_spark.operators.segment import (
+    BLOCK_SCHEMA, DICT_DDL, NORMS_SCHEMA)
 
 TOPK_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -1076,20 +1077,10 @@ class SegmentIndex:
         # shard).
         self.meta = IndexMeta(spark, path)
         self._has_reindex = self.meta.has_reindex
-        self.shard_batch = spark.createDataFrame(
-            self.meta.live, "shard long, batch string")
-        self.blocks = self._live_frame("blocks", BLOCK_SCHEMA)
-        self.norms = self._live_frame("norms", NORMS_SCHEMA)
+        self.shard_batch = self.meta.shard_batch
+        self.blocks = self.meta.frame("blocks", with_batch(BLOCK_SCHEMA))
+        self.norms = self.meta.frame("norms", with_batch(NORMS_SCHEMA))
         self._init_serving(cache_hot)
-
-    def _live_frame(self, table: str, schema: T.StructType) -> DataFrame:
-        """The live rows of a batch-partitioned table. The known schema
-        spares the read Spark's schema-inference job."""
-        schema = T.StructType(
-            schema.fields + [T.StructField("batch", T.StringType())])
-        return self.spark.read.schema(schema).parquet(
-            f"{self.path}/{table}").join(
-            F.broadcast(self.shard_batch), ["shard", "batch"], "semi")
 
     def _init_serving(self, cache_hot: bool) -> None:
         """Handle state every handle shape shares, set once its
@@ -1138,7 +1129,8 @@ class SegmentIndex:
                 F.max("max_tf").alias("max_tf"),
             )
         return (
-            self.spark.read.parquet(f"{self.path}/dictionary")
+            self.spark.read.schema(DICT_DDL + ", batch string")
+            .parquet(f"{self.path}/dictionary")
             .where(F.col("batch").isin(self.meta.batches))
             .groupBy("term")
             .agg(
@@ -1149,9 +1141,7 @@ class SegmentIndex:
         )
 
     def doc_meta(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/doc_meta").join(
-            F.broadcast(self.shard_batch), ["shard", "batch"], "semi"
-        )
+        return self.meta.frame("doc_meta")
 
     def lookup_terms(self, terms: list[str]) -> dict[str, dict]:
         """Dictionary lookup → {term: {df, cf, max_tf}} for the terms

@@ -94,27 +94,10 @@ def main() -> None:
     src = docs.select(
         F.col("doc_id"), F.coalesce(F.col("text"), F.lit("")).alias("text"),
     ).withColumn("shard", seg.shard_expr(512))
-    if tag == "before":
-        # the pre-r6 pipeline: occurrence explode → posting aggregate
-        from idzebra_spark.functions.tokenizer import tokenize
-        toks = tokenize(src, "text", "doc_id").withColumn(
-            "shard", seg.shard_expr(512))
-        toks = toks.where(
-            F.col("term").isNotNull() & (F.col("term") != ""))
-        tf_rows = toks.groupBy("shard", "term", "doc_id").agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"))
-        blocks = tf_rows.groupBy("shard").applyInPandas(
-            seg._build_shard_blocks(128, True), seg.BLOCK_SCHEMA)
-    else:
-        # the r6 doc-array pipeline build_index now plans
-        from idzebra_spark.functions.tokenizer import tokenize_array
-        doc_toks = src.select(
-            "shard", "doc_id",
-            tokenize_array(F.col("text")).alias("toks"))
-        blocks = doc_toks.groupBy("shard").applyInPandas(
-            seg._build_shard_blocks_from_docs(128, True),
-            seg.BLOCK_SCHEMA)
+    # the doc-array block pipeline build_index plans
+    blocks = seg._doc_arrays(src, None, "ascii", False).groupBy(
+        "shard").applyInPandas(seg._build_shard_blocks(128, True),
+                               seg.BLOCK_SCHEMA)
     plans["build_blocks"] = blocks
 
     for name, df in plans.items():

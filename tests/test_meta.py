@@ -121,15 +121,19 @@ def test_open_stats_and_lookup_run_no_job(spark, states):
         assert cold == warm >= 1, name
 
 
-def test_lookup_and_prefix_touch_one_row_group(spark, states, monkeypatch):
-    """On a dictionary of >= 8 row groups, one exact term and one
-    prefix each open exactly the one row group holding them, as
-    pyarrow's own statistics pruning of `term == t` agrees."""
+@pytest.mark.parametrize("name", ["fresh", "compacted"])
+def test_lookup_and_prefix_touch_one_row_group(spark, states, monkeypatch,
+                                               name):
+    """On a live dictionary partial of >= 8 row groups — a build's or
+    a compaction's — one exact term and one prefix each open exactly
+    the one row group holding them, as pyarrow's own statistics
+    pruning of `term == t` agrees."""
     from idzebra_spark import meta
 
-    idx = _open(spark, states, "fresh")
-    frags = list(ds.dataset(f"{states['fresh']}/dictionary",
-                            format="parquet").get_fragments())
+    idx = _open(spark, states, name)
+    frags = [f for b in idx.meta.batches for f in ds.dataset(
+        f"{states[name]}/dictionary/batch={b}",
+        format="parquet").get_fragments()]
     assert sum(f.num_row_groups for f in frags) >= 8
     # a term from the middle of one row group, so it and its prefix
     # range lie inside that group
@@ -157,6 +161,37 @@ def test_lookup_and_prefix_touch_one_row_group(spark, states, monkeypatch):
                           & (pc.field("term") < hi)) == 1
     assert t in idx.meta.prefix(None, t, idx.MAX_EXPAND)
     assert len(touched) == 1
+
+
+@pytest.mark.parametrize("name", ["fresh", "partial"])
+def test_table_frames_run_no_job(spark, states, name):
+    """Building the dictionary() and doc_meta() frames runs no Spark
+    job (their schemas are known, so nothing is inferred), and the
+    known doc_meta schema is the written one."""
+    idx = _open(spark, states, name)
+    n, (dictionary, doc_meta) = _jobs(
+        spark, lambda: (idx.dictionary(), idx.doc_meta()))
+    assert n == 0
+    written = spark.read.parquet(f"{states[name]}/doc_meta")
+    assert sorted((f.name, f.dataType) for f in doc_meta.schema) == \
+        sorted((f.name, f.dataType) for f in written.schema)
+    assert dictionary.columns == ["term", "df", "cf", "max_tf"]
+
+
+def test_noop_resume_build_runs_few_jobs(spark, states, tmp_path):
+    """Resuming a build whose shards are all done commits nothing and
+    runs at most 3 Spark jobs: the live set and the next build_seq
+    come from the driver-side lineage read, not from Spark jobs."""
+    from idzebra_spark.operators.segment import build_index
+
+    path = str(tmp_path / "resume")
+    shutil.copytree(states["fresh"], path)
+    corpus = _corpus(spark)
+    n, m = _jobs(spark, lambda: build_index(
+        spark, corpus, path, text_col="content", shard_size=128,
+        block_size=64, fields={"p": ["lang"]}))
+    assert m["batch"] is None and m["shards"] == 0
+    assert n <= 3, n
 
 
 def test_reader_never_requests_payload_columns(spark, states, monkeypatch):

@@ -267,7 +267,7 @@ def test_build_extends_existing_register_with_inherited_layout(
 
 
 def test_local_fs_path_forms():
-    from idzebra_spark.operators.segment import _local_fs_path
+    from idzebra_spark.meta import _local_fs_path
 
     assert _local_fs_path("/a/b") == "/a/b"
     assert _local_fs_path("rel/path") == "rel/path"

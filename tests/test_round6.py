@@ -1,11 +1,12 @@
 """Round-6 optimization parity tests.
 
 Every r6 change is a PHYSICAL rewrite that must leave results
-bit-identical: the doc-array build kernel vs the explode+aggregate
-pipeline, the numpy embedding-dedup kernel vs the bucket self-join,
-and the restructured brute-force BM25 vs its original plan. These
-tests pin each equivalence on adversarial inputs (empty docs,
-boundary separators, duplicate-heavy text), not just the fixtures.
+bit-identical: the doc-array build kernel vs the blocks the
+explode+aggregate pipeline wrote (golden digests), the numpy
+embedding-dedup kernel vs the bucket self-join, and the restructured
+brute-force BM25 vs its original plan. These tests pin each
+equivalence on adversarial inputs (empty docs, boundary separators,
+duplicate-heavy text), not just the fixtures.
 """
 
 from __future__ import annotations
@@ -30,57 +31,127 @@ def _block_digest(df):
     return len(rows), h.hexdigest()
 
 
+TRICKY_ROWS = [
+    (0, ""),                               # empty doc
+    (1, "   ...   "),                      # separators only
+    (2, "a"),                              # single token
+    (3, ".lead and trail."),               # boundary separators
+    (5, "dup dup dup dup other"),          # heavy tf
+    (7, "x " * 300),                       # long doc, one term
+    (8, "merge sort merge sort scan"),
+    (12, "zz yy xx ww vv uu"),             # reverse-lex terms
+    (13, "a1 b2 c3 " * 40),
+    (200, "cross shard doc"),              # lands in another shard
+    (513, "another far shard"),
+]
+
+# (title: a 'w' field, lang: a 'p' field) per TRICKY_ROWS doc: null,
+# empty and separators-only values must add no term
+FIELD_VALUES = {
+    0: ("A Title", "en"), 1: (None, None), 2: ("", ""),
+    3: ("lead lead", "..."), 5: ("dup", "En GB"), 7: ("x y " * 10, "en"),
+    8: ("Merge", None), 12: (None, "zz"), 13: ("a1 a1", "de"),
+    200: ("cross", "en"), 513: ("far far far", ""),
+}
+
+# a safari posting stream (doc_id, term, pos, field): null and empty
+# terms are dropped, but an empty term under a field is the composite
+# key 'title\x1f'; positions arrive unordered and one repeats
+STREAM_ROWS = [
+    (0, "alpha", 1, None), (0, "beta", 2, None), (0, "alpha", 3, None),
+    (0, "gamma", 1, "title"), (0, "gamma", 2, "title"),
+    (1, "beta", 1, ""), (1, None, 2, None), (1, "", 3, None),
+    (1, "", 1, "title"), (1, None, 4, "title"),
+    (2, "alpha", 5, None), (2, "alpha", 2, None), (2, "alpha", 2, None),
+    (130, "delta", 1, "subj"), (130, "alpha", 1, None),
+    (300, "alpha", 1, None),
+    *[(d, t, p, f) for d in range(3, 20) for t, p, f in (
+        ("alpha", 1, None), (f"w{d % 3}", 2, "title"),
+        ("beta", 3 + d % 2, None))],
+]
+
+
+def _tricky(spark):
+    return spark.createDataFrame(TRICKY_ROWS, "doc_id long, text string")
+
+
 @pytest.fixture()
 def tricky_corpus(spark):
-    rows = [
-        (0, ""),                               # empty doc
-        (1, "   ...   "),                      # separators only
-        (2, "a"),                              # single token
-        (3, ".lead and trail."),               # boundary separators
-        (5, "dup dup dup dup other"),          # heavy tf
-        (7, "x " * 300),                       # long doc, one term
-        (8, "merge sort merge sort scan"),
-        (12, "zz yy xx ww vv uu"),             # reverse-lex terms
-        (13, "a1 b2 c3 " * 40),
-        (200, "cross shard doc"),              # lands in another shard
-        (513, "another far shard"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return _tricky(spark)
 
 
-@pytest.mark.parametrize("store_positions", [True, False])
-def test_doc_array_build_kernel_parity(spark, tricky_corpus,
-                                       store_positions):
-    """The r6 doc-array kernel must emit byte-identical blocks to the
-    explode → groupBy(shard, term, doc_id) → collect_list pipeline."""
-    from idzebra_spark.functions.tokenizer import tokenize, tokenize_array
-    from idzebra_spark.operators import segment as seg
+def _build_input(spark, kind):
+    """(corpus, build_index options) of one build kind."""
+    if kind == "body":
+        return _tricky(spark), {}
+    if kind == "fields":
+        rows = [(d, t, *FIELD_VALUES[d]) for d, t in TRICKY_ROWS]
+        return (spark.createDataFrame(
+            rows, "doc_id long, text string, title string, lang string"),
+            {"fields": {"w": ["title"], "p": ["lang"]}})
+    assert kind == "pretokenized", kind
+    return (spark.createDataFrame(
+        STREAM_ROWS, "doc_id long, term string, pos int, field string"),
+        {"pretokenized": True})
 
-    ss, bs = 128, 4   # small blocks → many boundaries exercised
-    src = tricky_corpus.select(
-        "doc_id", F.coalesce("text", F.lit("")).alias("text"),
-    ).withColumn("shard", seg.shard_expr(ss))
 
-    toks = tokenize(src, "text", "doc_id").withColumn(
-        "shard", seg.shard_expr(ss))
-    toks = toks.where(F.col("term").isNotNull() & (F.col("term") != ""))
-    aggs = [F.count("*").alias("tf")]
-    if store_positions:
-        aggs.append(F.sort_array(F.collect_list("pos")).alias("positions"))
-    tf_rows = toks.groupBy("shard", "term", "doc_id").agg(*aggs)
-    old = tf_rows.groupBy("shard").applyInPandas(
-        seg._build_shard_blocks(bs, store_positions), seg.BLOCK_SCHEMA)
+def _built_block_digest(spark, path, kind, store_positions):
+    """(rows, sha256) of the blocks ``build_index`` writes for ``kind``
+    (small shards and blocks, so many boundaries are exercised)."""
+    from idzebra_spark.operators.segment import build_index
 
-    doc_toks = src.select(
-        "shard", "doc_id", tokenize_array(F.col("text")).alias("toks"))
-    new = doc_toks.groupBy("shard").applyInPandas(
-        seg._build_shard_blocks_from_docs(bs, store_positions),
-        seg.BLOCK_SCHEMA)
+    corpus, kw = _build_input(spark, kind)
+    build_index(spark, corpus, path, shard_size=128, block_size=4,
+                store_positions=store_positions, **kw)
+    return _block_digest(spark.read.parquet(f"{path}/blocks"))
 
-    n_old, d_old = _block_digest(old)
-    n_new, d_new = _block_digest(new)
-    assert n_old == n_new and n_old > 0
-    assert d_old == d_new
+
+# Recorded before every build went through the doc-array kernel: body
+# builds already ran it, fielded and pretokenized builds ran the
+# explode -> groupBy(shard, term, doc_id) -> collect_list pipeline.
+GOLDEN_BLOCK_DIGESTS = {
+    ("body", True): (
+        25, "bf90e4f60f6061226b370c36daa391305ffbbf1b74e7f6b97a7bb9029ffa39ec"),
+    ("body", False): (
+        25, "df8759a1b13bae8a278aaec062f775873089cbef125a0cdd2080f797f2bdcd9b"),
+    ("fields", True): (
+        40, "39c3d7e82aaf599b3157295f17eb72754c481178903e80ebcd007137241a51ec"),
+    ("fields", False): (
+        40, "459d6b0e6421764eb57bfeb554cf91881962328e498aae684744af2e15ce48ef"),
+    ("pretokenized", True): (
+        21, "60698c930e80b7059ad7466dc77dec2c2687749963b0a9fbbd95980681943bef"),
+    ("pretokenized", False): (
+        21, "0752250eaf8fdae81eda5a5a95ba31b38c1a7c3dab5855183cb451834fc270d9"),
+}
+
+
+@pytest.mark.parametrize("kind,store_positions",
+                         sorted(GOLDEN_BLOCK_DIGESTS))
+def test_build_block_digest_golden(spark, tmp_path, kind, store_positions):
+    """Every build kind emits byte-identical blocks to the recorded
+    goldens: same terms, posting order, metadata and payload bytes."""
+    got = _built_block_digest(spark, str(tmp_path / "idx"), kind,
+                              store_positions)
+    assert got == GOLDEN_BLOCK_DIGESTS[(kind, store_positions)]
+
+
+def test_pretokenized_null_pos(spark, tmp_path):
+    """A null pos in a pretokenized stream still counts toward its
+    posting's tf, but a build that stores positions fails on it rather
+    than write a made-up position."""
+    from idzebra_spark.operators.segment import build_index
+
+    stream = spark.createDataFrame(
+        [(0, "a", 1, None), (0, "a", None, None), (1, "a", 2, None)],
+        "doc_id long, term string, pos int, field string")
+    path = str(tmp_path / "nopos")
+    build_index(spark, stream, path, pretokenized=True,
+                store_positions=False)
+    blocks = spark.read.parquet(f"{path}/blocks").collect()
+    assert [(r["term"], r["sum_tf"]) for r in blocks] == [("a", 3)]
+    with pytest.raises(Exception, match="null pos"):
+        build_index(spark, stream, str(tmp_path / "pos"),
+                    pretokenized=True, store_positions=True)
 
 
 def test_embedding_dup_pairs_matches_join_form(spark):
