@@ -121,13 +121,7 @@ def test_open_stats_and_lookup_run_no_job(spark, states):
         assert cold == warm >= 1, name
 
 
-@pytest.mark.parametrize("name", ["fresh", "compacted"])
-def test_lookup_and_prefix_touch_one_row_group(spark, states, monkeypatch,
-                                               name):
-    """On a live dictionary partial of >= 8 row groups — a build's or
-    a compaction's — one exact term and one prefix each open exactly
-    the one row group holding them, as pyarrow's own statistics
-    pruning of `term == t` agrees."""
+def _check_one_row_group(spark, states, monkeypatch, name):
     from idzebra_spark import meta
 
     idx = _open(spark, states, name)
@@ -161,6 +155,20 @@ def test_lookup_and_prefix_touch_one_row_group(spark, states, monkeypatch,
                           & (pc.field("term") < hi)) == 1
     assert t in idx.meta.prefix(None, t, idx.MAX_EXPAND)
     assert len(touched) == 1
+
+
+def test_lookup_and_prefix_touch_one_row_group(spark, states, monkeypatch):
+    """On a build's dictionary partial of >= 8 row groups, one exact
+    term and one prefix each open exactly the one row group holding
+    them, as pyarrow's own statistics pruning of `term == t` agrees."""
+    _check_one_row_group(spark, states, monkeypatch, "fresh")
+
+
+def test_compacted_lookup_and_prefix_touch_one_row_group(spark, states,
+                                                         monkeypatch):
+    """The same on a compaction's dictionary partial: it is written
+    term-ordered too, so its row groups prune the same way."""
+    _check_one_row_group(spark, states, monkeypatch, "compacted")
 
 
 @pytest.mark.parametrize("name", ["fresh", "partial"])
