@@ -31,30 +31,8 @@ from idzebra_spark.operators.segment import (
     compact_index,
     update_index,
 )
-from idzebra_spark.operators.wand import (
-    SegmentIndex, tree_patterns, tree_rank_terms)
+from idzebra_spark.operators.wand import SegmentIndex
 from idzebra_spark.plans.query import Node, parse
-
-
-def _flat_rankable(root: Node) -> tuple[str, list[str], list[str]] | None:
-    """If the query is a flat term / n-ary OR / n-ary AND of plain
-    terms (optionally minus NOT term branches), return
-    (mode, terms, not_terms) so it can run on the WAND engine."""
-    not_terms: list[str] = []
-    node = root
-    while node.op == "not":
-        neg = node.children[1]
-        if neg.op != "term":
-            return None
-        not_terms.append(neg.value)
-        node = node.children[0]
-    if node.op == "term":
-        return ("or", [node.value], not_terms)
-    if node.op in ("and", "or") and all(
-        c.op == "term" for c in node.children
-    ):
-        return (node.op, [c.value for c in node.children], not_terms)
-    return None
 
 
 class ZebraSpark:
@@ -274,71 +252,34 @@ class ZebraSpark:
         return node
 
     def search(self, query: str, k: int = 10) -> DataFrame:
-        """Ranked search: (doc_id, score_milli). Flat boolean queries
-        run on the block-max WAND path; structured ones (parens mixing
-        ops, phrases, prefixes) evaluate the rset DAG over SEGMENT
-        leaves and rank with corpus-GLOBAL statistics — the same doc
-        gets the same score on either route (no subset stats, no
-        corpus re-tokenization; /root/reference/index/rpnsearch.c:
-        2567-2772 evaluates the same DAG over ISAMB leaves)."""
+        """Ranked search: (doc_id, score_milli). Every query — a flat
+        boolean one (block-max pruned) or a structured one (parens
+        mixing ops, phrases, prefixes) — runs as its rset DAG over
+        SEGMENT leaves, ranked with corpus-GLOBAL statistics (no subset
+        stats, no corpus re-tokenization; Zebra's
+        index/rpnsearch.c:2567-2772 evaluates the same DAG over ISAMB
+        leaves)."""
         q = parse(query)
         self._fold_node(q.root)
-        flat = _flat_rankable(q.root)
-        if flat is not None:
-            mode, terms, neg = flat
-            return self.index.topk(terms, k, mode, not_terms=neg or None)
         return self.index.search_tree(q.root.to_rset_tree(), k)
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Batched ranked search: {query_id: query string} → one
         DataFrame (query_id, doc_id, score_milli) with per-query
-        top-k, computed in ONE Spark job for all flat boolean queries
-        (SegmentIndex.topk_many). Structured queries (phrases, parens
-        mixing ops) batch through the rset-DAG twin
-        (SegmentIndex.search_tree_many) — a mixed workload costs TWO
-        cogrouped jobs total, never one per query; each query's rows
-        are identical to ``search(q, k)``. Before either runs, every
-        query's dictionary work (flat terms, tree rank terms, wildcard
-        expansions) is resolved in one call — driver-side reads for
-        terms and prefixes, at most one dictionary job for the other
-        wildcard kinds — so both plans read only memo hits."""
-        flat_specs: dict[str, dict] = {}
-        tree_specs: dict[str, object] = {}
-        terms_needed: set[str] = set()
-        patterns: list[tuple] = []
-        for qid, qs in queries.items():
-            root = self._fold_node(parse(qs).root)
-            flat = _flat_rankable(root)
-            if flat is not None:
-                mode, terms, neg = flat
-                flat_specs[qid] = {"terms": terms, "mode": mode,
-                                   "not_terms": neg}
-                terms_needed.update(t.lower() for t in terms)
-            else:
-                tree = tree_specs[qid] = root.to_rset_tree()
-                terms_needed.update(t.lower() for t in tree_rank_terms(tree))
-                patterns += tree_patterns(tree)
-        self.index.resolve(sorted(terms_needed), patterns)
-        parts = []
-        if flat_specs:
-            parts.append(self.index.topk_many(flat_specs, k))
-        if tree_specs:
-            parts.append(self.index.search_tree_many(tree_specs, k))
-        if not parts:
-            from idzebra_spark.operators.wand import BATCH_RESULT_SCHEMA
-
-            return self.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        top-k. Every query, flat or structured, runs in ONE cogrouped
+        job (SegmentIndex.search_tree_many), never one per query; each
+        query's rows are identical to ``search(q, k)``. Before it runs,
+        every query's dictionary work (term lookups, rank terms,
+        wildcard expansions) is resolved in one call — driver-side
+        reads for terms and prefixes, at most one dictionary job for
+        the other wildcard kinds."""
+        trees = {qid: self._fold_node(parse(qs).root).to_rset_tree()
+                 for qid, qs in queries.items()}
+        return self.index.search_tree_many(trees, k)
 
     def count(self, query: str) -> int:
         q = parse(query)
         self._fold_node(q.root)
-        flat = _flat_rankable(q.root)
-        if flat is not None and not flat[2]:
-            return self.index.count(flat[1], flat[0])
         return self.index.eval_tree(q.root.to_rset_tree()).count()
 
     def _fold_term(self, s: str) -> str:

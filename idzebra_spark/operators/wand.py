@@ -16,6 +16,11 @@ optimizations the reference leans on:
   (/root/reference/rset/rsmultiandor.c:26-31); the kernel intersects
   terms in ascending document frequency.
 
+Every query surface — single or batched, flat or structured, ranked
+or counted — is a batch of rset trees run by ONE per-shard kernel
+(:func:`_query_kernel`) through ONE plan builder
+(``SegmentIndex._score``); a flat query is a shallow tree.
+
 Distribution: blocks and norms are cogrouped by shard — scoring is
 embarrassingly parallel across shards (no cross-shard traffic), then a
 tiny global top-k merge. θ for OR queries is seeded IN-KERNEL: the
@@ -46,15 +51,32 @@ from idzebra_spark.operators.segment import (
     BLOCK_SCHEMA, DICT_DDL, NORMS_SCHEMA)
 
 TOPK_SCHEMA = T.StructType([
+    T.StructField("query_id", T.StringType()),
     T.StructField("doc_id", T.LongType()),
     T.StructField("raw", T.DoubleType()),
-    T.StructField("n_matched", T.IntegerType()),
 ])
 
-RESULT_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("score_milli", T.LongType()),
-])
+
+def _milli() -> Column:
+    # the ROUNDED score — the same tie discipline as
+    # bruteforce.bm25_topk and the DuckDB oracle, so rank identity
+    # holds even when two raw scores round to one milli
+    return F.round(F.col("raw") * 10000, 0).cast("long").alias("score_milli")
+
+
+def _best(out: DataFrame, k: int) -> DataFrame:
+    """One query's (doc_id, score_milli) top-k, score desc, doc_id asc."""
+    return (out.select("doc_id", _milli())
+            .orderBy(F.desc("score_milli"), F.asc("doc_id")).limit(k))
+
+
+def _best_per_query(out: DataFrame, k: int) -> DataFrame:
+    """(query_id, doc_id, score_milli): each query's top-k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score_milli"), F.asc("doc_id"))
+    return (out.select("query_id", "doc_id", _milli())
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= k).drop("_rn"))
 
 
 def _bm25_tf(tf, dl, avgdl, k1=K1, b=B):
@@ -106,300 +128,6 @@ def _decode_norms(norms_pdf: pd.DataFrame):
     )
     dls = varint_decode(bytes(norms_pdf["doclens_bin"].iloc[0])).astype(np.int64)
     return docids, dls
-
-
-def _shard_kernel(term_idf, term_order, avgdl, mode, theta, k, k1=K1, b=B,
-                  neg_terms=()):
-    """Per-shard scorer. term_idf: {term: idf}; term_order: positive
-    terms in ascending df (AND intersection order); neg_terms are
-    AND-NOT exclusions (rsbool difference,
-    /root/reference/rset/rsbool.c:173-225): any doc containing one is
-    dropped before scoring. Returns per-shard top-k."""
-
-    n_terms = len(term_order)
-    neg_terms = tuple(neg_terms)
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"),
-         "raw": pd.Series([], dtype="float64"),
-         "n_matched": pd.Series([], dtype="int32")}
-    )
-
-    def fn(blocks: pd.DataFrame, norms: pd.DataFrame) -> pd.DataFrame:
-        if len(blocks) == 0 or len(norms) == 0:
-            return empty
-        nd_docids, nd_dls = _decode_norms(norms)
-        min_dl = float(norms["min_dl"].iloc[0])
-
-        by_term = {t: g for t, g in blocks.groupby("term", sort=False)}
-        present = [t for t in term_order if t in by_term]
-        if mode == "and" and len(present) < n_terms:
-            return empty
-        if not present:
-            return empty
-
-        # AND-NOT exclusion set: docids of any negative term in-shard
-        excluded = None
-        for t in neg_terms:
-            if t not in by_term:
-                continue
-            gt = by_term[t]
-            e, _ = _decode_docids_tfs(
-                [bytes(x) for x in gt["docids_bin"]],
-                [bytes(x) for x in gt["tfs_bin"]],
-                gt["n_docs"].to_numpy(np.int64),
-            )
-            excluded = e if excluded is None else np.union1d(excluded, e)
-        if excluded is not None:
-            excluded = np.unique(excluded)
-
-        # term-level score upper bounds from block-max metadata
-        term_ub = {
-            t: float(
-                term_idf[t]
-                * _bm25_tf(by_term[t]["max_tf"].max(), min_dl, avgdl, k1, b)
-            )
-            for t in present
-        }
-        sum_ub = sum(term_ub.values())
-
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        candidates: np.ndarray | None = None
-        # OR: decode in descending-idf order; after the first (rarest)
-        # term is fully scored, its k-th solo score is a valid lower
-        # bound on this shard's final k-th score (partial <= final), so
-        # later terms' blocks prune against it — in-kernel θ seeding,
-        # no extra distributed pass. AND keeps ascending-df order
-        # (rsmultiandor.c:26-31 child ordering).
-        loop_order = (
-            sorted(present, key=lambda t: (-term_idf[t], t)) if mode == "or"
-            else present
-        )
-        theta_local = float(theta)
-        for ti, t in enumerate(loop_order):
-            g = by_term[t]
-            first = g["first_docid"].to_numpy(np.int64)
-            last = g["last_docid"].to_numpy(np.int64)
-            keep = np.ones(len(g), dtype=bool)
-            if mode == "and" and candidates is not None:
-                # zig-zag analog: only decode blocks overlapping a
-                # surviving candidate (isamb_pp_forward skipping)
-                lo = np.searchsorted(candidates, first, side="left")
-                hi = np.searchsorted(candidates, last, side="right")
-                keep = hi > lo
-            elif mode == "or" and theta_local > 0.0 and ti > 0:
-                # block-max WAND: block ub + other terms' max ubs < θ
-                # ⇒ no doc in this block can reach the top-k (lossless,
-                # strict <; ties at θ are kept)
-                blk_ub = term_idf[t] * _bm25_tf(
-                    g["max_tf"].to_numpy(np.int64), min_dl, avgdl, k1, b
-                )
-                keep = (blk_ub + (sum_ub - term_ub[t])) >= theta_local
-            if not keep.any():
-                if mode == "and":
-                    return empty
-                decoded[t] = (np.empty(0, np.int64), np.empty(0, np.int64))
-                continue
-            gk = g[keep]
-            d, tfv = _decode_docids_tfs(
-                [bytes(x) for x in gk["docids_bin"]],
-                [bytes(x) for x in gk["tfs_bin"]],
-                gk["n_docs"].to_numpy(np.int64),
-            )
-            if d.size > 1 and not np.all(d[:-1] <= d[1:]):
-                o = np.argsort(d, kind="mergesort")
-                d, tfv = d[o], tfv[o]
-            if excluded is not None and d.size:
-                m = ~np.isin(d, excluded, assume_unique=False)
-                d, tfv = d[m], tfv[m]
-            decoded[t] = (d, tfv)
-            if mode == "and":
-                candidates = d if candidates is None else np.intersect1d(
-                    candidates, d, assume_unique=True
-                )
-                if candidates.size == 0:
-                    return empty
-            elif mode == "or" and ti == 0 and k is not None and d.size >= k:
-                # in-kernel θ seed from the rarest term's solo scores.
-                # One milli (1e-4) of slack keeps the prune lossless
-                # under the ROUNDED ordering: a doc whose raw score is
-                # just below the kth raw can still round-tie at the
-                # milli level and win on doc_id, so it must survive.
-                dl0 = nd_dls[np.searchsorted(nd_docids, d)]
-                solo = term_idf[t] * _bm25_tf(tfv, dl0, avgdl, k1, b)
-                kth = float(np.partition(solo, -k)[-k]) - 1e-4
-                theta_local = max(theta_local, kth)
-
-        if mode == "and":
-            docs = candidates
-            dl = nd_dls[np.searchsorted(nd_docids, docs)]
-            raw = np.zeros(docs.size, dtype=np.float64)
-            for t in present:
-                d, tfv = decoded[t]
-                raw += term_idf[t] * _bm25_tf(
-                    tfv[np.searchsorted(d, docs)], dl, avgdl, k1, b
-                )
-            n_matched = np.full(docs.size, n_terms, dtype=np.int32)
-        else:
-            all_docs = np.concatenate([decoded[t][0] for t in present])
-            if all_docs.size == 0:
-                return empty
-            docs, inv = np.unique(all_docs, return_inverse=True)
-            dl = nd_dls[np.searchsorted(nd_docids, docs)]
-            raw = np.zeros(docs.size, dtype=np.float64)
-            n_matched = np.zeros(docs.size, dtype=np.int64)
-            off = 0
-            for t in present:
-                d, tfv = decoded[t]
-                if d.size == 0:
-                    continue
-                idx = inv[off : off + d.size]
-                raw[idx] += term_idf[t] * _bm25_tf(tfv, dl[idx], avgdl, k1, b)
-                n_matched[idx] += 1
-                off += d.size
-
-        if k is not None and docs.size > k:
-            # bounded top-k (score desc, docid asc) — Zebra's
-            # resultSetInsertRank tie discipline (zsets.c:716-736).
-            # The cut uses ROUNDED milli scores (floor(x*1e4+0.5) ==
-            # Spark round HALF_UP for x>=0) so the per-shard selection
-            # agrees with the global milli-ordered merge: two raw
-            # scores that round to the same milli tie-break by doc_id
-            # here exactly as they do in the final orderBy.
-            milli = np.floor(raw * 10000.0 + 0.5).astype(np.int64)
-            sel = np.lexsort((docs, -milli))[:k]
-            docs, raw, n_matched = docs[sel], raw[sel], n_matched[sel]
-        return pd.DataFrame(
-            {"doc_id": docs.astype(np.int64), "raw": raw,
-             "n_matched": n_matched.astype(np.int32)}
-        )
-
-    return fn
-
-
-BATCH_TOPK_SCHEMA = T.StructType([
-    T.StructField("query_id", T.StringType()),
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("raw", T.DoubleType()),
-])
-
-BATCH_RESULT_SCHEMA = T.StructType([
-    T.StructField("query_id", T.StringType()),
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("score_milli", T.LongType()),
-])
-
-
-def _multi_query_kernel(specs, avgdl, k, k1=K1, b=B):
-    """Per-shard scorer for a BATCH of queries — the serving-throughput
-    path. One cogrouped pass decodes every referenced term ONCE and
-    scores all queries against the shared decode cache; per query the
-    set assembly and float-summation order are IDENTICAL to
-    :func:`_shard_kernel` (AND sums ascending-df, OR descending-idf),
-    so each query's rows match its single-query run bit-for-bit.
-
-    Zebra amortizes per-query cost with its ISAMB page cache across a
-    session (/root/reference/isamb/isamb.c:380-450); on Spark the
-    per-JOB scheduler floor (~0.5 s) dominates single-query latency,
-    so the batch analogue ships N queries into one job instead.
-
-    ``specs``: [{qid, mode, idf: {term: idf}, order: [terms asc df],
-    neg: (terms,)}]."""
-    empty = pd.DataFrame({
-        "query_id": pd.Series([], dtype="object"),
-        "doc_id": pd.Series([], dtype="int64"),
-        "raw": pd.Series([], dtype="float64"),
-    })
-
-    def fn(blocks: pd.DataFrame, norms: pd.DataFrame) -> pd.DataFrame:
-        if len(blocks) == 0 or len(norms) == 0:
-            return empty
-        nd_docids, nd_dls = _decode_norms(norms)
-        by_term = {t: g for t, g in blocks.groupby("term", sort=False)}
-        dec: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-
-        def decode(t):
-            if t not in dec:
-                g = by_term[t]
-                d, tfv = _decode_docids_tfs(
-                    [bytes(x) for x in g["docids_bin"]],
-                    [bytes(x) for x in g["tfs_bin"]],
-                    g["n_docs"].to_numpy(np.int64),
-                )
-                if d.size > 1 and not np.all(d[:-1] <= d[1:]):
-                    o = np.argsort(d, kind="mergesort")
-                    d, tfv = d[o], tfv[o]
-                dec[t] = (d, tfv)
-            return dec[t]
-
-        out_q, out_d, out_r = [], [], []
-        for s in specs:
-            order, idf, neg, mode = s["order"], s["idf"], s["neg"], s["mode"]
-            present = [t for t in order if t in by_term]
-            if not present or (mode == "and" and len(present) < len(order)):
-                continue
-            excluded = None
-            for t in neg:
-                if t in by_term:
-                    e = decode(t)[0]
-                    excluded = e if excluded is None else np.union1d(excluded, e)
-            if mode == "and":
-                docs = None
-                for t in present:
-                    d = decode(t)[0]
-                    docs = d if docs is None else np.intersect1d(
-                        docs, d, assume_unique=True)
-                    if docs.size == 0:
-                        break
-                if docs is None or docs.size == 0:
-                    continue
-                if excluded is not None:
-                    docs = docs[~np.isin(docs, excluded)]
-                if docs.size == 0:
-                    continue
-                dl = nd_dls[np.searchsorted(nd_docids, docs)]
-                raw = np.zeros(docs.size, dtype=np.float64)
-                for t in present:  # ascending-df order, as _shard_kernel
-                    d, tfv = decode(t)
-                    raw += idf[t] * _bm25_tf(
-                        tfv[np.searchsorted(d, docs)], dl, avgdl, k1, b)
-            else:
-                loop = sorted(present, key=lambda t: -idf[t])
-                arrs = []
-                for t in loop:
-                    d, tfv = decode(t)
-                    if excluded is not None and d.size:
-                        m = ~np.isin(d, excluded)
-                        d, tfv = d[m], tfv[m]
-                    arrs.append((t, d, tfv))
-                all_docs = np.concatenate([d for _, d, _ in arrs])
-                if all_docs.size == 0:
-                    continue
-                docs, inv = np.unique(all_docs, return_inverse=True)
-                dl = nd_dls[np.searchsorted(nd_docids, docs)]
-                raw = np.zeros(docs.size, dtype=np.float64)
-                off = 0
-                for t, d, tfv in arrs:  # descending-idf, as _shard_kernel
-                    if d.size == 0:
-                        continue
-                    ix = inv[off:off + d.size]
-                    raw[ix] += idf[t] * _bm25_tf(tfv, dl[ix], avgdl, k1, b)
-                    off += d.size
-            if k is not None and docs.size > k:
-                milli = np.floor(raw * 10000.0 + 0.5).astype(np.int64)
-                sel = np.lexsort((docs, -milli))[:k]
-                docs, raw = docs[sel], raw[sel]
-            out_q.append(np.full(docs.size, s["qid"], dtype=object))
-            out_d.append(docs)
-            out_r.append(raw)
-        if not out_d:
-            return empty
-        return pd.DataFrame({
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "raw": np.concatenate(out_r),
-        })
-
-    return fn
 
 
 PHRASE_SCHEMA = T.StructType([
@@ -531,8 +259,6 @@ def z3958_to_regex(pattern: str) -> str:
     502-567): '?' alone = any sequence ('.*'), '?n' = up to n chars
     ('.?' × n, n capped at 20), '*' = any sequence, '#' = exactly one
     character."""
-    import re as _re
-
     out, i = ["^"], 0
     while i < len(pattern):
         c = pattern[i]
@@ -553,16 +279,11 @@ def z3958_to_regex(pattern: str) -> str:
             out.append(".")
             i += 1
         else:
-            out.append(_re.escape(c))
+            out.append(re.escape(c))
             i += 1
     out.append("$")
     return "".join(out)
 
-
-RSET_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("raw", T.DoubleType()),
-])
 
 POSTINGS_SCHEMA = T.StructType([
     T.StructField("term", T.StringType()),
@@ -574,8 +295,11 @@ POSTINGS_SCHEMA = T.StructType([
 
 def _tree_terms(tree) -> tuple[set, set]:
     """(plain_terms, positional_terms) referenced anywhere in the
-    tree — positional terms (phrase/prox leaves) need pos_bin."""
+    tree — positional terms (phrase/prox leaves) need pos_bin. A
+    wildcard leaf names no term until it is expanded."""
     op = tree[0]
+    if _leaf_pattern(tree) is not None:
+        return set(), set()
     if op == "term":
         return {tree[1]}, set()
     if op == "terms":
@@ -837,10 +561,9 @@ _EV_EMPTY = np.empty(0, np.int64)
 
 
 def _ev_node(node, docs_of: dict, pos_of: dict) -> np.ndarray:
-    """Evaluate one rset-tree node over decoded per-shard postings —
-    shared by the single-tree and batched kernels. Set algebra on
-    sorted unique docid arrays (rpnsearch.c:2567-2772 over ISAMB
-    leaves)."""
+    """Evaluate one rset-tree node over decoded per-shard postings for
+    :func:`_query_kernel`: set algebra on sorted unique docid arrays
+    (rpnsearch.c:2567-2772 over ISAMB leaves)."""
     E = _EV_EMPTY
     op = node[0]
     if op == "term":
@@ -886,83 +609,88 @@ def _ev_node(node, docs_of: dict, pos_of: dict) -> np.ndarray:
     raise ValueError(f"unknown tree node {op!r}")
 
 
-def _rset_kernel(tree, term_idf, avgdl, rank_order, k, k1=K1, b=B):
-    """Per-shard rset-DAG evaluator + BM25 ranker — the Spark twin of
-    rpn_search_structure evaluating the whole boolean tree over ISAMB
-    leaf streams (/root/reference/index/rpnsearch.c:2567-2772), then
-    resultSetRank with CORPUS-GLOBAL statistics (term_idf carries the
-    global df; avgdl/N come from the full norms table). One cogrouped
-    pass per shard: decode → set algebra (numpy sorted-set ops) →
-    score → bounded top-k cut under the milli tie discipline."""
-    plain, phrased = _tree_terms(tree)
-    want_pos = bool(phrased)
-
-    empty = pd.DataFrame({
-        "doc_id": pd.Series([], dtype="int64"),
-        "raw": pd.Series([], dtype="float64"),
-    })
-
-    def fn(blocks: pd.DataFrame, norms: pd.DataFrame) -> pd.DataFrame:
-        if len(blocks) == 0:
-            return empty
-        by_term = {t: g for t, g in blocks.groupby("term", sort=False)}
-        docs_of: dict[str, tuple] = {}
-        pos_of: dict[str, tuple] = {}
-        for t in (plain | phrased):
-            if t not in by_term:
-                continue
-            need_p = want_pos and t in phrased
-            d, tfv, tok_off, p = _decode_with_offsets(by_term[t], need_p)
-            docs_of[t] = (d, tfv)
-            if need_p:
-                pos_of[t] = (d, tok_off, p)
-
-        docs = _ev_node(tree, docs_of, pos_of)
-        if docs.size == 0:
-            return empty
-        if not rank_order:
-            return pd.DataFrame({
-                "doc_id": docs.astype(np.int64),
-                "raw": np.zeros(docs.size, dtype=np.float64),
-            })
-        if len(norms) == 0:
-            return empty
-        nd_docids, nd_dls = _decode_norms(norms)
-        dl = nd_dls[np.searchsorted(nd_docids, docs)]
-        raw = np.zeros(docs.size, dtype=np.float64)
-        for t in rank_order:
-            if t not in docs_of:
-                continue
-            d, tfv = docs_of[t]
-            idx = np.searchsorted(d, docs)
-            ok = (idx < d.size)
-            ok[ok] = d[idx[ok]] == docs[ok]
-            if not ok.any():
-                continue
-            raw[ok] += term_idf[t] * _bm25_tf(tfv[idx[ok]], dl[ok], avgdl,
-                                              k1, b)
-        if k is not None and docs.size > k:
-            milli = np.floor(raw * 10000.0 + 0.5).astype(np.int64)
-            sel = np.lexsort((docs, -milli))[:k]
-            docs, raw = docs[sel], raw[sel]
-        return pd.DataFrame({"doc_id": docs.astype(np.int64), "raw": raw})
-
-    return fn
+def _flat_shape(tree) -> tuple[str, list[str], list[str]] | None:
+    """(mode, terms, not_terms) when ``tree`` is a flat query — an
+    OR/AND of term leaves, or one term leaf, under a chain of NOTs
+    whose right sides are term leaves — else None. Only this shape
+    prunes blocks in :func:`_query_kernel`."""
+    neg = []
+    while tree[0] == "not":
+        if tree[2][0] != "term":
+            return None
+        neg.append(tree[2][1])
+        tree = tree[1]
+    if tree[0] == "term":
+        return "or", [tree[1]], neg
+    if tree[0] in ("and", "or") and all(c[0] == "term" for c in tree[1]):
+        return tree[0], [c[1] for c in tree[1]], neg
+    return None
 
 
-def _rset_kernel_many(specs, avgdl, k, k1=K1, b=B):
-    """Per-shard evaluator for a BATCH of rset DAGs — the structured-
-    query twin of :func:`_multi_query_kernel`. Every term referenced
-    by ANY tree is decoded once per shard (positions only for terms
-    some tree uses positionally); each spec then evaluates its DAG
-    and ranks against the shared decode cache with per-query math
-    identical to :func:`_rset_kernel`, so each query's rows match its
-    single-tree run exactly.
+def _flat_tree(terms, mode: str = "or", not_terms=None) -> tuple:
+    """The rset tree of a flat query: ``mode`` over the lower-cased
+    term leaves, minus each lower-cased NOT term."""
+    tree = (mode, [("term", t) for t in sorted({t.lower() for t in terms})])
+    for t in sorted({t.lower() for t in not_terms or ()}):
+        tree = ("not", tree, ("term", t))
+    return tree
 
-    ``specs``: [{qid, tree (expanded), idf: {term: idf},
-    order: [rank terms], plain: set, phrased: set}]."""
-    all_plain = set().union(*(s["plain"] for s in specs))
-    all_phrased = set().union(*(s["phrased"] for s in specs))
+
+def _can_match(node, info: dict) -> bool:
+    """False when the dictionary shows the tree matches nothing: a
+    term, phrase or proximity leaf whose term ``info`` maps to None
+    (absent) is empty, and emptiness propagates through and/or/not."""
+    op = node[0]
+    if op == "term":
+        return info.get(node[1]) is not None
+    if op == "terms":
+        return bool(node[1])
+    if op in ("phrase", "prox"):
+        return all(info.get(t) is not None for t in node[1])
+    if op == "and":
+        return bool(node[1]) and all(_can_match(c, info) for c in node[1])
+    if op == "or":
+        return any(_can_match(c, info) for c in node[1])
+    return _can_match(node[1], info)  # not
+
+
+def _query_kernel(specs, avgdl, k, k1=K1, b=B):
+    """Per-shard kernel under every ranked search, batch, count and
+    rset-tree evaluation — rpn_search_structure evaluating the boolean
+    tree over ISAMB leaf streams (Zebra index/rpnsearch.c:2567-2772),
+    then resultSetRank with CORPUS-GLOBAL statistics
+    (idf carries the global df; avgdl/N come from the full norms
+    table), for a BATCH of queries in one cogrouped pass.
+
+    ``specs``: [{qid, tree (expanded), idf: {rank term: idf}, order:
+    [the tree's dictionary terms, ascending (df, term)]}]. Per shard,
+    each term is decoded in full at most once, into a cache the batch
+    shares (positions only for terms some tree uses positionally).
+    Each tree is evaluated with :func:`_ev_node`, its docs are scored
+    over its own rank terms in ``order`` — one summation order for
+    every query — and cut to a bounded top-k under the milli tie
+    discipline. A spec with no ``idf`` is not ranked (raw 0);
+    ``k=None`` keeps every doc.
+
+    Flat queries (:func:`_flat_shape`) prune blocks, losslessly:
+    - AND decodes its terms in ascending df and skips blocks that
+      overlap no surviving candidate (isamb_pp_forward skipping;
+      smallest-first children, rsmultiandor.c:26-31);
+    - OR with ``k`` decodes its rarest term in full and seeds θ from
+      the k-th best solo score of its docs left after the NOT
+      exclusions. A block of another term is skipped when its block-max
+      bound — the block's ub, plus the rarest term's best exact score
+      inside the block's docid range, plus the other terms' ubs — is
+      below θ.
+    A skipped block holds only docs scoring below θ, so no top-k doc
+    sits in one. Pruned decodes stay out of the cache, and a cached
+    full decode stands in for a pruned one."""
+    prepared, phrased_all = [], set()
+    for s in specs:
+        plain, phrased = _tree_terms(s["tree"])
+        phrased_all |= phrased
+        prepared.append((s, plain | phrased, _flat_shape(s["tree"]),
+                         [t for t in s["order"] if t in s["idf"]]))
     empty = pd.DataFrame({
         "query_id": pd.Series([], dtype="object"),
         "doc_id": pd.Series([], dtype="int64"),
@@ -973,57 +701,138 @@ def _rset_kernel_many(specs, avgdl, k, k1=K1, b=B):
         if len(blocks) == 0:
             return empty
         by_term = {t: g for t, g in blocks.groupby("term", sort=False)}
-        docs_of: dict[str, tuple] = {}
+        full: dict[str, tuple] = {}
         pos_of: dict[str, tuple] = {}
-        for t in (all_plain | all_phrased):
-            if t not in by_term:
-                continue
-            need_p = t in all_phrased
-            d, tfv, tok_off, p = _decode_with_offsets(by_term[t], need_p)
-            docs_of[t] = (d, tfv)
-            if need_p:
+        nd: list = []
+
+        def decode(t, keep=None):
+            """t's (docids, tfs): the cached full decode, else the
+            blocks ``keep`` selects (not cached), else a full decode,
+            which is cached."""
+            if t in full:
+                return full[t]
+            g = by_term[t]
+            if keep is not None and not keep.all():
+                if not keep.any():
+                    return _EV_EMPTY, _EV_EMPTY
+                return _decode_block_rows(g[keep], False)[:2]
+            d, tfv, tok_off, p = _decode_with_offsets(g, t in phrased_all)
+            full[t] = (d, tfv)
+            if t in phrased_all:
                 pos_of[t] = (d, tok_off, p)
-        nd = None
+            return full[t]
+
+        def dl_of(docs):
+            if not nd:
+                nd.extend(_decode_norms(norms))
+            return nd[1][np.searchsorted(nd[0], docs)]
+
+        def flat_view(mode, pos, neg, idf, order):
+            """The flat query's postings by term, its blocks pruned;
+            None when it cannot match in this shard."""
+            view = {t: decode(t) for t in neg if t in by_term}
+            excluded = (np.unique(np.concatenate([view[t][0] for t in view]))
+                        if view else _EV_EMPTY)
+            terms = [t for t in order if t in pos]
+            present = [t for t in terms if t in by_term]
+            if not present or (mode == "and" and len(present) < len(terms)):
+                return None
+            if mode == "and":
+                cand = None
+                for t in present:
+                    keep = None
+                    if cand is not None:
+                        g = by_term[t]
+                        keep = (np.searchsorted(
+                            cand, g["last_docid"].to_numpy(np.int64), "right")
+                            > np.searchsorted(
+                            cand, g["first_docid"].to_numpy(np.int64), "left"))
+                    d, _ = view[t] = decode(t, keep)
+                    cand = (np.setdiff1d(d, excluded, assume_unique=True)
+                            if cand is None
+                            else np.intersect1d(cand, d, assume_unique=True))
+                    if cand.size == 0:
+                        return None
+                return view
+            first = present[0]
+            d1, tf1 = view[first] = decode(first)
+            theta = 0.0
+            if k is not None and idf.get(first) and len(norms):
+                keep1 = ~np.isin(d1, excluded)
+                d1, tf1 = d1[keep1], tf1[keep1]
+                solo = idf[first] * _bm25_tf(tf1, dl_of(d1), avgdl, k1, b)
+                if solo.size >= k:
+                    # one milli (1e-4) of slack keeps the prune lossless
+                    # under the ROUNDED ordering: a doc just below the
+                    # k-th raw score can still round-tie at the milli
+                    # level and win on doc_id, so it must survive
+                    theta = float(np.partition(solo, -k)[-k]) - 1e-4
+            min_dl = float(norms["min_dl"].iloc[0]) if len(norms) else 0.0
+            ub = {t: idf.get(t, 0.0) * float(_bm25_tf(
+                by_term[t]["max_tf"].max(), min_dl, avgdl, k1, b))
+                for t in present}
+            for t in present[1:]:
+                keep = None
+                if theta > 0.0:
+                    g = by_term[t]
+                    lo = np.searchsorted(
+                        d1, g["first_docid"].to_numpy(np.int64), "left")
+                    hi = np.searchsorted(
+                        d1, g["last_docid"].to_numpy(np.int64), "right")
+                    best1 = np.array([solo[a:z].max() if z > a else 0.0
+                                      for a, z in zip(lo, hi)])
+                    blk_ub = idf.get(t, 0.0) * _bm25_tf(
+                        g["max_tf"].to_numpy(np.int64), min_dl, avgdl, k1, b)
+                    rest = sum(ub.values()) - ub[t] - ub[first]
+                    # strict <: ties at θ are kept
+                    keep = blk_ub + best1 + rest >= theta
+                view[t] = decode(t, keep)
+            return view
+
         out_q, out_d, out_r = [], [], []
-        for s in specs:
-            docs = _ev_node(s["tree"], docs_of, pos_of)
+        for s, own, flat, rank in prepared:
+            if flat is None:
+                for t in own:
+                    if t in by_term:
+                        decode(t)
+                view = full
+            else:
+                view = flat_view(*flat, s["idf"], s["order"])
+                if view is None:
+                    continue
+            docs = _ev_node(s["tree"], view, pos_of)
             if docs.size == 0:
                 continue
-            # rank only over THIS spec's own terms: the decode cache
-            # is shared across the batch, so a term another query
-            # scanned must not leak into this query's BM25 (it would
-            # diverge from the single-tree run, which never decodes it)
-            own = s["plain"] | s["phrased"]
-            order = [t for t in s["order"] if t in docs_of and t in own]
-            if not order:
-                raw = np.zeros(docs.size, dtype=np.float64)
-            else:
-                if nd is None:
-                    if len(norms) == 0:
+            raw = np.zeros(docs.size, dtype=np.float64)
+            if rank:
+                if len(norms) == 0:
+                    continue
+                dl = dl_of(docs)
+                for t in rank:
+                    if t not in view:
                         continue
-                    nd = _decode_norms(norms)
-                dl = nd[1][np.searchsorted(nd[0], docs)]
-                raw = np.zeros(docs.size, dtype=np.float64)
-                for t in order:
-                    d, tfv = docs_of[t]
+                    d, tfv = view[t]
                     idx = np.searchsorted(d, docs)
-                    ok = (idx < d.size)
+                    ok = idx < d.size
                     ok[ok] = d[idx[ok]] == docs[ok]
-                    if not ok.any():
-                        continue
                     raw[ok] += s["idf"][t] * _bm25_tf(
                         tfv[idx[ok]], dl[ok], avgdl, k1, b)
             if k is not None and docs.size > k:
+                # bounded top-k (score desc, docid asc) — Zebra's
+                # resultSetInsertRank tie discipline (zsets.c:716-736).
+                # The cut uses ROUNDED milli scores (floor(x*1e4+0.5) ==
+                # Spark round HALF_UP for x>=0) so the per-shard
+                # selection agrees with the global milli-ordered merge.
                 milli = np.floor(raw * 10000.0 + 0.5).astype(np.int64)
                 sel = np.lexsort((docs, -milli))[:k]
                 docs, raw = docs[sel], raw[sel]
-            out_q.extend([s["qid"]] * docs.size)
+            out_q.append(np.full(docs.size, s["qid"], dtype=object))
             out_d.append(docs)
             out_r.append(raw)
         if not out_d:
             return empty
         return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="object"),
+            "query_id": np.concatenate(out_q),
             "doc_id": np.concatenate(out_d).astype(np.int64),
             "raw": np.concatenate(out_r),
         })
@@ -1228,9 +1037,6 @@ class SegmentIndex:
 
     # ----------------------------------------------------------- query
 
-    def _empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
-
     def close(self) -> None:
         """Release this handle's Spark storage: the cache_hot
         blocks/norms. A handle is cheap to reopen; long-lived sessions juggling many
@@ -1295,17 +1101,55 @@ class SegmentIndex:
         p = max(n, self.spark.sparkContext.defaultParallelism, 1)
         return df.repartition(p, "shard")
 
-    def _run(self, terms_info, avgdl, mode, theta, k,
-             neg_terms=()) -> DataFrame:
-        terms = [t for t, _ in terms_info]
-        term_idf = {t: i["idf"] for t, i in terms_info}
-        order = [t for t, _ in sorted(terms_info, key=lambda x: x[1]["df"])]
-        blk = self.blocks.where(
-            F.col("term").isin(sorted(set(terms) | set(neg_terms)))
-        )
+    def _specs(self, trees: dict, rank: bool = True) -> list[dict]:
+        """Kernel specs of {query_id: rset tree}. One :meth:`resolve`
+        answers every tree's lookups (its term, phrase and proximity
+        leaves and its rank terms) and wildcard expansions; a tree the
+        dictionary shows cannot match is dropped, so a query on
+        missing terms runs no job. Each spec's rank terms are its own
+        tree's terms (a term another query in the batch decodes never
+        leaks into its BM25), summed in ascending (df, term) order.
+        ``rank=False`` (counts, hit sets) leaves ``idf`` empty."""
+        n_docs, _ = self.stats()
+        if n_docs == 0:
+            return []
+        rank_of = {qid: {t.lower() for t in tree_rank_terms(tree)}
+                   if rank else set() for qid, tree in trees.items()}
+        lookups = set().union(*rank_of.values(), *(
+            p | f for p, f in map(_tree_terms, trees.values())))
+        info, exp = self.resolve(
+            sorted(lookups),
+            [key for tree in trees.values() for key in tree_patterns(tree)])
+        absent = {t for t, v in info.items() if v is None}
+        specs = []
+        for qid, tree in trees.items():
+            tree = _expand_tree(tree, exp)
+            if not _can_match(tree, info):
+                continue
+            plain, phrased = _tree_terms(tree)
+            terms = (plain | phrased) - absent
+            df = {t: info[t]["df"] for t in terms if t in info}
+            order = sorted(df, key=lambda t: (df[t], t))
+            idf = {t: math.log(1.0 + (n_docs - df[t] + 0.5) / (df[t] + 0.5))
+                   for t in order if t in rank_of[qid]}
+            specs.append({"qid": str(qid), "tree": tree, "terms": terms,
+                          "idf": idf, "order": order})
+        return specs
+
+    def _score(self, specs: list[dict], k: int | None,
+               blocks: DataFrame | None = None) -> DataFrame:
+        """The one plan under every query surface: the specs' resolved
+        terms filter the blocks (``blocks``, when given, narrows them
+        first, e.g. to sampled shards), then ONE cogroup with the norms
+        runs :func:`_query_kernel` per shard → (query_id, doc_id, raw).
+        No spec → an empty frame, and no job."""
+        if not specs:
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
+        terms = sorted(set().union(*(s["terms"] for s in specs)))
+        blk = (self.blocks if blocks is None else blocks).where(
+            F.col("term").isin(terms))
         nrm = self._norms_side(blk)
-        kernel = _shard_kernel(term_idf, order, avgdl, mode, theta, k,
-                               neg_terms=neg_terms)
+        kernel = _query_kernel(specs, self.stats()[1], k)
         return (
             self._kernel_input(blk).groupBy("shard")
             .cogroup(nrm.groupBy("shard"))
@@ -1316,7 +1160,8 @@ class SegmentIndex:
              not_terms: list[str] | None = None) -> DataFrame:
         """BM25 top-k -> (doc_id, score_milli), rank-identical to
         operators.bruteforce.bm25_topk. ``not_terms``: AND-NOT
-        exclusions applied before scoring (rsbool semantics).
+        exclusions applied before scoring (rsbool semantics). The
+        query runs as its flat rset tree (:func:`_flat_tree`).
 
         Serving shape: the dictionary lookup is a separate step on the
         driver, in front of the one kernel job. A memo miss is an
@@ -1331,35 +1176,8 @@ class SegmentIndex:
         broadcast join: warm-term latency regressed 0.56 → 0.75 s,
         since fusion re-evaluates the dictionary subtree every
         query."""
-        neg = tuple(sorted(set(t.lower() for t in (not_terms or []))))
-        terms = sorted(set(t.lower() for t in terms))
-        n_docs, avgdl = self.stats()
-        if n_docs == 0:
-            return self._empty_result()
-        info = self.lookup_terms(terms)
-        if mode == "and" and len(info) < len(terms):
-            return self._empty_result()
-        if not info:
-            return self._empty_result()
-        terms_info = []
-        for t, d in info.items():
-            d["idf"] = math.log(1.0 + (n_docs - d["df"] + 0.5) / (d["df"] + 0.5))
-            terms_info.append((t, d))
-
-        # θ is seeded inside the shard kernel (rarest term's solo
-        # scores) — no extra distributed pass needed.
-        out = self._run(terms_info, avgdl, mode, 0.0, k, neg_terms=neg)
-        # order by the ROUNDED score (milli) — the same tie discipline
-        # as bruteforce.bm25_topk and the DuckDB oracle, so rank
-        # identity holds even when two raw scores round to one milli.
-        return (
-            out.select(
-                "doc_id",
-                F.round(F.col("raw") * 10000, 0).cast("long").alias("score_milli"),
-            )
-            .orderBy(F.desc("score_milli"), F.asc("doc_id"))
-            .limit(k)
-        )
+        tree = _flat_tree(terms, mode, not_terms)
+        return _best(self._score(self._specs({"": tree}), k), k)
 
     def topk_many(self, queries: dict[str, dict], k: int = 10) -> DataFrame:
         """Batched BM25 top-k: score EVERY query in one cogrouped pass
@@ -1370,7 +1188,7 @@ class SegmentIndex:
         "not_terms": [...]}}. Each query's rows are rank-identical to
         ``topk(terms, k, mode, not_terms)`` — the kernel decodes each
         referenced term once and reuses it across queries, and the
-        per-query math matches the single-query kernel exactly.
+        per-query math matches the single-query run exactly.
 
         Why: single-query latency is floored by Spark job scheduling
         (~0.5 s/job), not kernel time; the reference amortizes its
@@ -1379,53 +1197,10 @@ class SegmentIndex:
         term→idf maps into ONE job amortizes the floor N× — the
         serving-throughput shape for a query frontend that drains a
         request queue in micro-batches."""
-        n_docs, avgdl = self.stats()
-        if n_docs == 0 or not queries:
-            return self.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-        all_pos = sorted({
-            t.lower() for q in queries.values() for t in q["terms"]})
-        info = self.lookup_terms(all_pos)  # one driver-side read, memoized
-        specs = []
-        scan_terms: set[str] = set()
-        for qid, q in queries.items():
-            terms = sorted({t.lower() for t in q["terms"]})
-            neg = tuple(sorted({t.lower()
-                                for t in (q.get("not_terms") or [])}))
-            mode = q.get("mode", "or")
-            ti = {t: info[t] for t in terms if t in info}
-            if not ti or (mode == "and" and len(ti) < len(terms)):
-                continue  # no hits possible — emit nothing for qid
-            idf = {
-                t: math.log(1.0 + (n_docs - d["df"] + 0.5) / (d["df"] + 0.5))
-                for t, d in ti.items()
-            }
-            order = sorted(ti, key=lambda t: ti[t]["df"])
-            specs.append({"qid": str(qid), "mode": mode, "idf": idf,
-                          "order": order, "neg": neg})
-            scan_terms.update(idf)
-            scan_terms.update(neg)
-        if not specs:
-            return self.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-        blk = self.blocks.where(F.col("term").isin(sorted(scan_terms)))
-        nrm = self._norms_side(blk)
-        kernel = _multi_query_kernel(specs, avgdl, k)
-        out = (
-            self._kernel_input(blk).groupBy("shard")
-            .cogroup(nrm.groupBy("shard"))
-            .applyInPandas(kernel, BATCH_TOPK_SCHEMA)
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score_milli"), F.asc("doc_id"))
-        return (
-            out.select(
-                "query_id", "doc_id",
-                F.round(F.col("raw") * 10000, 0).cast("long")
-                .alias("score_milli"),
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-        )
+        trees = {qid: _flat_tree(q["terms"], q.get("mode", "or"),
+                                 q.get("not_terms"))
+                 for qid, q in queries.items()}
+        return _best_per_query(self._score(self._specs(trees), k), k)
 
     # ------------------------------------------------ rset-DAG queries
 
@@ -1455,8 +1230,6 @@ class SegmentIndex:
         merged by term (rpnscan.c:285-480): the same display term
         appearing in several registers shows once with summed df."""
         seed = seed.lower().split("\x1f")[-1]
-        from idzebra_spark.operators.boolean import FIELD_SEP
-
         full = self.dictionary().select("term", F.col("df").cast("long")
                                         .alias("df"))
         fields = ([field] if isinstance(field, str) else field) or []
@@ -1474,8 +1247,6 @@ class SegmentIndex:
                         F.expr(f"substring(term, {len(pfx) + 1})")
                         .alias("term"),
                         F.col("term").alias("key"), "df"))
-            from functools import reduce
-
             d = reduce(lambda a, b: a.unionByName(b), parts)
         merged = d.groupBy("term").agg(F.sum("df").alias("df"))
 
@@ -1569,115 +1340,31 @@ class SegmentIndex:
         key = (kind, pattern, field, errors, stem)
         return list(self.resolve(patterns=[key])[1][key])
 
-    def _tree_run(self, tree, rank_terms: list[str], k: int | None):
-        rank_terms = sorted(set(t.lower() for t in rank_terms))
-        # one resolve: the tree's wildcards and its rank terms
-        found, exp = self.resolve(rank_terms, tree_patterns(tree))
-        tree = _expand_tree(tree, exp)
-        plain, phrased = _tree_terms(tree)
-        all_terms = sorted(plain | phrased)
-        if not all_terms:
-            return self._empty_result().select("doc_id",
-                                               F.lit(0.0).alias("raw"))
-        n_docs, avgdl = self.stats()
-        term_idf = {
-            t: math.log(1.0 + (n_docs - found[t]["df"] + 0.5)
-                        / (found[t]["df"] + 0.5))
-            for t in rank_terms if found[t] is not None
-        }
-        rank_order = list(term_idf)
-        blk = self.blocks.where(F.col("term").isin(all_terms))
-        nrm = self._norms_side(blk)
-        kernel = _rset_kernel(tree, term_idf, avgdl, rank_order, k)
-        return (
-            self._kernel_input(blk).groupBy("shard")
-            .cogroup(nrm.groupBy("shard"))
-            .applyInPandas(kernel, RSET_SCHEMA)
-        )
-
     def eval_tree(self, tree) -> DataFrame:
         """Evaluate a boolean rset DAG over segment leaves → distinct
         doc_id set. Tree nodes: ('term', t) | ('terms', [t..]) |
         ('phrase', [t..]) | ('prefix'|'suffix'|'contains'|'regex'|
         'z3958', pattern) | ('and'|'or', [children]) |
         ('not', left, right)."""
-        return self._tree_run(tree, [], None).select("doc_id")
+        return self._score(self._specs({"": tree}, rank=False),
+                           None).select("doc_id")
 
-    def search_tree(self, tree, k: int = 10,
-                    rank_terms: list[str] | None = None) -> DataFrame:
+    def search_tree(self, tree, k: int = 10) -> DataFrame:
         """Ranked structured search: evaluate the rset DAG, then BM25-
         rank the matching docs with corpus-GLOBAL stats (N, avgdl,
-        per-term df) — scores are identical to what the flat WAND path
-        gives the same doc for the same terms (no subset statistics).
-        Returns (doc_id, score_milli) under the milli tie discipline."""
-        if rank_terms is None:
-            rank_terms = tree_rank_terms(tree)
-        out = self._tree_run(tree, rank_terms, k)
-        return (
-            out.select(
-                "doc_id",
-                F.round(F.col("raw") * 10000, 0).cast("long")
-                .alias("score_milli"),
-            )
-            .orderBy(F.desc("score_milli"), F.asc("doc_id"))
-            .limit(k)
-        )
+        per-term df) — a flat tree scores exactly as :meth:`topk`
+        (no subset statistics). Returns (doc_id, score_milli) under
+        the milli tie discipline."""
+        return _best(self._score(self._specs({"": tree}), k), k)
 
     def search_tree_many(self, trees: "dict[str, object]",
                          k: int = 10) -> DataFrame:
-        """Batched STRUCTURED search: {query_id: rset tree} → one
-        DataFrame (query_id, doc_id, score_milli), all trees evaluated
-        in ONE cogrouped pass (shared per-shard term decode — the
-        structured twin of :meth:`topk_many`). Each query's rows are
-        rank-identical to ``search_tree(tree, k)``."""
-        n_docs, avgdl = self.stats()
-        if n_docs == 0 or not trees:
-            return self.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-        rank_of = {qid: sorted({t.lower() for t in tree_rank_terms(tree)})
-                   for qid, tree in trees.items()}
-        # one resolve for every tree's wildcards and rank terms
-        info, exp = self.resolve(
-            sorted(set().union(*rank_of.values())),
-            [key for tree in trees.values() for key in tree_patterns(tree)])
-        specs = []
-        scan_terms: set[str] = set()
-        for qid, tree in trees.items():
-            tr = _expand_tree(tree, exp)
-            plain, phrased = _tree_terms(tr)
-            if not (plain | phrased):
-                continue
-            rt = rank_of[qid]
-            idf = {
-                t: math.log(1.0 + (n_docs - info[t]["df"] + 0.5)
-                            / (info[t]["df"] + 0.5))
-                for t in rt if info[t] is not None
-            }
-            specs.append({"qid": str(qid), "tree": tr, "idf": idf,
-                          "order": [t for t in rt if t in idf],
-                          "plain": plain, "phrased": phrased})
-            scan_terms |= plain | phrased
-        if not specs:
-            return self.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-        blk = self.blocks.where(F.col("term").isin(sorted(scan_terms)))
-        nrm = self._norms_side(blk)
-        kernel = _rset_kernel_many(specs, avgdl, k)
-        out = (
-            self._kernel_input(blk).groupBy("shard")
-            .cogroup(nrm.groupBy("shard"))
-            .applyInPandas(kernel, BATCH_TOPK_SCHEMA)
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score_milli"), F.asc("doc_id"))
-        return (
-            out.select(
-                "query_id", "doc_id",
-                F.round(F.col("raw") * 10000, 0).cast("long")
-                .alias("score_milli"),
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-        )
+        """Batched search: {query_id: rset tree} → one DataFrame
+        (query_id, doc_id, score_milli), every tree — flat or
+        structured — evaluated in ONE cogrouped pass with a shared
+        per-shard term decode. Each query's rows are rank-identical
+        to ``search_tree(tree, k)``."""
+        return _best_per_query(self._score(self._specs(trees), k), k)
 
     def term_postings(self, terms: list[str],
                       with_positions: bool = True) -> DataFrame:
@@ -1722,9 +1409,8 @@ class SegmentIndex:
         pseudo-randomizes the shard draw via xxhash64 (useful when
         docid ranges correlate with content and systematic sampling
         would alias)."""
-        terms = sorted(set(t.lower() for t in terms))
-        info = self.lookup_terms(terms)
-        if not info or (mode == "and" and len(info) < len(terms)):
+        specs = self._specs({"": _flat_tree(terms, mode)}, rank=False)
+        if not specs:
             return 0
         shards = self.norms.select("shard", "n_docs")
         if picker == "stride":
@@ -1734,31 +1420,15 @@ class SegmentIndex:
             picked = shards.where(
                 F.pmod(F.xxhash64("shard"), 1000) < int(sample * 1000)
             )
-        tot = shards.agg(F.sum("n_docs")).collect()[0][0]
         got = picked.agg(F.sum("n_docs")).collect()[0][0]
         if not got:
-            return self.count(terms, mode)
-        n_docs, avgdl = self.stats()
-        terms_info = [(t, {**d, "idf": 1.0}) for t, d in info.items()]
-        blk = self.blocks.where(F.col("term").isin(terms)).join(
-            picked.select("shard"), "shard", "semi"
-        )
-        nrm = self._norms_side(blk)
-        kernel = _shard_kernel(
-            {t: 1.0 for t, _ in terms_info},
-            [t for t, _ in sorted(terms_info, key=lambda x: x[1]["df"])],
-            avgdl, mode, 0.0, None,
-        )
-        rows = self._kernel_input(blk).groupBy("shard").cogroup(
-            nrm.groupBy("shard")).applyInPandas(
-            kernel, TOPK_SCHEMA
-        )
-        if mode == "and":
-            rows = rows.where(F.col("n_matched") == len(terms))
-        sampled_hits = rows.count()
+            return self._score(specs, None).count()
+        sampled_hits = self._score(specs, None, self.blocks.join(
+            picked.select("shard"), "shard", "semi")).count()
         # integer half-up scale: no float, no banker's-rounding skew —
         # DuckDB computes the identical value from the same integers
-        return int((sampled_hits * int(tot) + int(got) // 2) // int(got))
+        tot = self.stats()[0]
+        return int((sampled_hits * tot + int(got) // 2) // int(got))
 
     def phrase(self, terms: list[str], k: int = 10) -> DataFrame:
         """Exact adjacent phrase over the segment's stored positions →
@@ -1773,13 +1443,5 @@ class SegmentIndex:
 
     def count(self, terms: list[str], mode: str = "or") -> int:
         """Exact boolean hit count (tl_query analogue)."""
-        terms = sorted(set(t.lower() for t in terms))
-        n_docs, avgdl = self.stats()
-        info = self.lookup_terms(terms)
-        if not info or (mode == "and" and len(info) < len(terms)):
-            return 0
-        terms_info = [(t, {**d, "idf": 1.0}) for t, d in info.items()]
-        rows = self._run(terms_info, avgdl, mode, 0.0, None)
-        if mode == "and":
-            rows = rows.where(F.col("n_matched") == len(terms))
-        return rows.count()
+        return self._score(self._specs({"": _flat_tree(terms, mode)},
+                                       rank=False), None).count()

@@ -52,7 +52,7 @@ class Node:
 
     def to_rset_tree(self):
         """Convert to the segment engine's tree format
-        (operators.wand._rset_kernel) — the rset DAG evaluated over
+        (operators.wand._query_kernel) — the rset DAG evaluated over
         ISAMB-leaf block streams instead of a re-tokenized corpus."""
         if self.op == "term":
             return ("term", self.value)

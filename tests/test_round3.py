@@ -201,6 +201,112 @@ def test_search_many_one_dictionary_job(spark, seg_idx):
     assert n_again == 0
 
 
+def test_search_many_mixed_batch_is_one_cogroup(spark, seg_idx):
+    """A batch mixing flat and structured queries plans ONE
+    cogrouped kernel (two before: one per kind, unioned), and each
+    query's rows still equal its single ``search`` rows."""
+    from idzebra_spark.api import ZebraSpark
+
+    zs = ZebraSpark(spark, seg_idx.path)
+    queries = {
+        "or": "merge OR sort",
+        "and": "spark AND query",
+        "not": "merge NOT slow",
+        "phrase": '"hash scan"',
+        "tree": "(me* OR window) AND data",
+    }
+    df = zs.search_many(queries, k=5)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    got = {}
+    for r in df.collect():
+        got.setdefault(r["query_id"], []).append(
+            (r["doc_id"], r["score_milli"]))
+    for qid, qs in queries.items():
+        single = [(r["doc_id"], r["score_milli"])
+                  for r in zs.search(qs, k=5).collect()]
+        assert sorted(got.get(qid, [])) == sorted(single), qid
+
+
+def test_approx_count_takes_n_from_stats(spark, seg_idx):
+    """approx_count scales by N from ``stats()`` (driver-side norms
+    totals) instead of a Spark aggregate over the norms: at least two
+    fewer jobs, the same value. The previous code ran 15 jobs for this
+    call on this fixture (local[4]) and returned 479."""
+    idx = seg_idx
+    idx.approx_count(["merge", "sort"])  # warm the handle's memos
+    n_jobs, n = _jobs_in_group(
+        spark, "t_r3_approx", lambda: idx.approx_count(["merge", "sort"]))
+    assert n == 479
+    assert n_jobs <= 15 - 2
+
+
+def test_query_kernel_prunes_a_batch_losslessly(seg_idx, monkeypatch):
+    """The one kernel, called in-process on one shard's rows (no Spark
+    job) with a batch of two flat ORs sharing a term, an AND and an
+    AND-NOT: each query's rows equal the query run alone and an
+    unpruned run (the same tree under a one-child OR, which is not
+    flat, cut to k afterwards), and the batch decodes fewer blocks
+    than the shard holds for its terms. The previous single-query
+    kernel already skipped blocks of 'dup AND small'; the previous
+    batch kernel skipped none. The NOT query's rarest term's best doc
+    carries the NOT term, so a θ seeded before the exclusion would
+    prune a top-k doc away."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from idzebra_spark.operators import wand
+
+    k = 1
+    trees = {
+        "or_a": wand._flat_tree(["dup", "data"]),
+        "or_b": wand._flat_tree(["dup", "line"]),
+        "and": wand._flat_tree(["dup", "small"], "and"),
+        "not": wand._flat_tree(["dup", "group"], not_terms=["hash"]),
+    }
+    terms = ["data", "dup", "group", "hash", "line", "small"]
+    blocks = seg_idx.blocks.where(
+        (F.col("shard") == 0) & F.col("term").isin(terms)).toPandas()
+    norms = seg_idx.norms.where(F.col("shard") == 0).toPandas()
+    avgdl = seg_idx.stats()[1]
+    specs = seg_idx._specs(trees)
+    assert [s["qid"] for s in specs] == list(trees)
+
+    def run(batch, kk):
+        out = wand._query_kernel(batch, avgdl, kk)(blocks, norms)
+        return {q: sorted(zip(g["doc_id"], g["raw"]))
+                for q, g in out.groupby("query_id")}
+
+    def cut(rows):
+        milli = [int(np.floor(r * 10000.0 + 0.5)) for _, r in rows]
+        best = sorted(range(len(rows)), key=lambda i: (-milli[i], rows[i][0]))
+        return sorted(rows[i] for i in best[:k])
+
+    solo, = seg_idx._specs({"dup": ("term", "dup")})
+    best_dup = run([solo], k)["dup"]
+    hash_docs = {d for d, _ in run(seg_idx._specs(
+        {"hash": ("term", "hash")}, rank=False), None)["hash"]}
+    assert best_dup and all(d in hash_docs for d, _ in best_dup)
+
+    decoded = []
+    real = wand._decode_docids_tfs
+
+    def spy(docids_bins, tfs_bins, n_docs):
+        decoded.append(len(n_docs))
+        return real(docids_bins, tfs_bins, n_docs)
+
+    monkeypatch.setattr(wand, "_decode_docids_tfs", spy)
+    batch = run(specs, k)
+    n_batch = sum(decoded)
+    for s in specs:
+        alone = run([s], k).get(s["qid"], [])
+        unpruned = run([{**s, "tree": ("or", [s["tree"]])}], None)
+        assert batch.get(s["qid"], []) == alone, s["qid"]
+        assert alone == cut(unpruned.get(s["qid"], [])), s["qid"]
+        assert alone, s["qid"]
+    assert n_batch < len(blocks), (n_batch, len(blocks))
+
+
 def test_dictionary_memos_are_lru_bounded(spark, seg_idx, monkeypatch):
     """More distinct patterns (and terms) than the memo cap, resolved
     in one batched call: the Spark-side patterns cost one collect, the
