@@ -55,6 +55,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from idzebra_spark.functions.codec import (
     delta_varint_encode,
@@ -103,6 +104,8 @@ NORMS_SCHEMA = T.StructType([
 ])
 
 DICT_DDL = "term string, df long, cf long, max_tf int, n_blocks long"
+LINEAGE_DDL = ("shard long, docs_indexed long, postings_emitted long, "
+               "bytes_compressed long, batch string, build_seq int")
 
 
 def _build_shard_blocks(block_size: int, store_positions: bool):
@@ -519,7 +522,7 @@ def build_index(
     store_positions: bool = True,
     resume: bool = True,
     fail_after_shards: int | None = None,
-    reindex_shards: "list[int] | DataFrame | None" = None,
+    reindex_shards: list[int] | None = None,
     fields: dict[str, list[str]] | None = None,
     alphabet: str = "ascii",
     pretokenized: bool = False,
@@ -554,11 +557,13 @@ def build_index(
     first N pending shards, simulating a crash/partial build that a
     subsequent resume call must complete without double counting.
 
-    ``reindex_shards``: force-rebuild exactly these shards from the
-    given corpus snapshot (shard-granular copy-on-write — the update
-    path; readers resolve the latest build_seq per shard). A lineage
-    tombstone row (docs_indexed=0) is written even for shards whose
-    docs were all deleted, so the stale batch stops being visible.
+    ``reindex_shards``: force-rebuild exactly these shards (a list of
+    shard ids) from the given corpus snapshot (shard-granular
+    copy-on-write — the update path; readers resolve the latest
+    build_seq per shard). At most one id per shard, as the lineage
+    rows :class:`IndexMeta` reads on the driver. A lineage tombstone row
+    (docs_indexed=0) is written even for shards whose docs were all
+    deleted, so the stale batch stops being visible.
     ``pretokenized``: the corpus IS a posting stream ``(doc_id, term,
     pos[, field])`` — the safari record filter's contract
     (/root/reference/index/mod_safari.c:118-190: the producer supplies
@@ -646,18 +651,11 @@ def build_index(
             *[F.col(c) for c in mcols],
         ).withColumn("shard", shard_expr(shard_size))
 
-    reindex_df: DataFrame | None = None
     if reindex_shards is not None:
-        # list (test convenience) or DataFrame['shard'] (the scale
-        # path: update_index passes the changed-shard set as a
-        # DataFrame — never a driver-side list of 10^6 shards)
-        if isinstance(reindex_shards, DataFrame):
-            reindex_df = reindex_shards.select(
-                F.col("shard").cast("long")).distinct()
-        else:
-            reindex_df = spark.createDataFrame(
-                [(int(s),) for s in reindex_shards], "shard long")
-        src = src.join(reindex_df, "shard", "semi")
+        # the set ships in the task binary Spark broadcasts once per
+        # stage: no broadcast job, no join
+        reindex_shards = sorted({int(s) for s in reindex_shards})
+        src = src.where(F.col("shard").isin(reindex_shards))
     elif resume and committed is not None:
         # every shard in lineage is done (each has a live batch)
         src = src.join(F.broadcast(committed.shard_batch.select("shard")),
@@ -670,7 +668,7 @@ def build_index(
         ]
         src = src.where(F.col("shard").isin(keep))
 
-    if src.isEmpty() and reindex_shards is None:
+    if reindex_shards is None and src.isEmpty():
         return {"batch": None, "shards": 0, "docs": 0}
 
     if cache_source:
@@ -768,14 +766,20 @@ def build_index(
             .parquet(f"{path}/blocks")
         )
 
+    # each pool thread runs under the caller's job group, description
+    # and tags (without pinned threads, PYSPARK_PIN_THREAD=false, the
+    # wrapper hands back the session and threads carry no properties)
+    inherit = inheritable_thread_target(spark)
+    if inherit is spark:
+        inherit = lambda w: w  # noqa: E731
     with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = [ex.submit(w) for w in (w_meta, w_norms, w_blocks)]
+        futs = [ex.submit(inherit(w)) for w in (w_meta, w_norms, w_blocks)]
         for f in futs:
             f.result()
 
     # read back what was written: validates readability and gives true
-    # byte accounting for lineage metrics. Cached — three aggregations
-    # (dictionary, per-shard metrics, totals) share one scan.
+    # byte accounting for lineage metrics. Cached — the dictionary
+    # partial and the per-shard metrics share one scan.
     written = (
         _batch_blocks(spark, path, batch)
         .select("term", "shard", "n_docs", "sum_tf", "max_tf",
@@ -790,32 +794,27 @@ def build_index(
     # per-shard norms rows, which stay exact across shard reindexes)
 
     # lineage LAST = the commit record (shadow-page flip,
-    # bfile/commit.c semantics). One row per shard with metrics.
-    per_shard_blocks = written.groupBy("shard").agg(
-        F.sum("sum_tf").alias("postings_emitted"),
-        (F.sum("len_d") + F.sum("len_t") + F.sum("len_p")).alias(
-            "bytes_compressed"
-        ),
-    )
-    doc_counts = meta.groupBy("shard").agg(F.count("*").alias("docs_indexed"))
-    if reindex_df is not None:
-        # tombstones: every requested shard gets a lineage row, even if
-        # all of its docs were deleted — otherwise the stale batch
-        # would keep winning at read time
-        doc_counts = reindex_df.join(doc_counts, "shard", "left")
-    lineage_rows = (
-        doc_counts
-        .join(per_shard_blocks, "shard", "left")
-        .na.fill(0)
-        .withColumn("batch", F.lit(batch))
-        .withColumn("build_seq", F.lit(build_seq))
-    ).cache()
-    out = lineage_rows.agg(
-        F.count("*").alias("shards"),
-        F.sum("docs_indexed").alias("docs"),
-        F.sum("postings_emitted").alias("postings"),
-        F.sum("bytes_compressed").alias("bytes"),
-    ).collect()[0]
+    # bfile/commit.c semantics), planned on the driver from ONE
+    # per-shard collect of the two cached frames. Every requested shard
+    # gets a row, even one whose docs were all deleted (a tombstone) —
+    # otherwise the stale batch would keep winning at read time.
+    zero = F.lit(0)
+    sums = {r["shard"]: (r["docs"], r["postings"], r["bytes"]) for r in (
+        meta.select("shard", F.lit(1).alias("docs"),
+                    zero.alias("postings"), zero.alias("bytes"))
+        .unionByName(written.select(
+            "shard", zero.alias("docs"), F.col("sum_tf").alias("postings"),
+            (F.col("len_d") + F.col("len_t") + F.col("len_p"))
+            .alias("bytes")))
+        .groupBy("shard").agg(*[F.sum(c).alias(c) for c in
+                                ("docs", "postings", "bytes")])
+    ).collect()}
+    lineage = pd.DataFrame(
+        [(s, *sums.get(s, (0, 0, 0)))
+         for s in sorted(set(sums).union(reindex_shards or ()))],
+        columns=["shard", "docs_indexed", "postings_emitted",
+                 "bytes_compressed"], dtype="int64",
+    ).assign(batch=batch, build_seq=np.int32(build_seq))
     # meta BEFORE the lineage commit: a crash in between leaves an
     # uncommitted batch with correct meta (harmless) — the reverse
     # would commit an index that silently opens with default settings
@@ -824,18 +823,19 @@ def build_index(
                      store_positions=store_positions, fields=fields,
                      alphabet=_alphabet_to_meta(alphabet),
                      pretokenized=pretokenized, match_cols=match_cols)
-    lineage_rows.write.mode("append").parquet(f"{path}/lineage")
-    lineage_rows.unpersist()
+    # a pandas frame goes over Arrow: the write starts no Python worker
+    spark.createDataFrame(lineage, LINEAGE_DDL).coalesce(1).write \
+        .mode("append").parquet(f"{path}/lineage")
     written.unpersist()
     for df in _to_unpersist:
         df.unpersist()
     src.unpersist()
     return {
         "batch": batch,
-        "shards": out["shards"],
-        "docs": out["docs"],
-        "postings": out["postings"],
-        "bytes": out["bytes"],
+        "shards": len(lineage),
+        "docs": int(lineage["docs_indexed"].sum()),
+        "postings": int(lineage["postings_emitted"].sum()),
+        "bytes": int(lineage["bytes_compressed"].sum()),
     }
 
 
@@ -867,9 +867,7 @@ def compact_index(spark: SparkSession, path: str) -> dict:
     _write_dictionary(_batch_blocks(spark, path, batch), path, batch)
 
     # commit: carry the live shards' metrics forward under the new seq
-    committed.frame("lineage", "shard long, docs_indexed long, "
-                    "postings_emitted long, bytes_compressed long, "
-                    "batch string, build_seq int") \
+    committed.frame("lineage", LINEAGE_DDL) \
         .drop("batch", "build_seq") \
         .withColumn("batch", F.lit(batch)) \
         .withColumn("build_seq", F.lit(build_seq)) \
@@ -916,7 +914,8 @@ def _update_by_match_key(
       the doc_id diff path.
 
     All joins are match_key/doc_id equality joins — index-sized, never
-    collected; the remap is a projection + one key join, so the 100 TB
+    collected (only the changed shard ids are, as on the sha-diff
+    path); the remap is a projection + one key join, so the 100 TB
     shape is unchanged from the sha-diff path.
     """
     from pyspark.sql.window import Window
@@ -1023,21 +1022,17 @@ def _rebuild_changed(spark: SparkSession, changed: DataFrame,
                      **build_kw) -> dict:
     """Rebuild the ``changed`` shards (a ``shard`` frame) from
     ``corpus`` in one batch, after ``check()`` when given; nothing
-    when no shard changed. ``changed`` is cached: the count, the
-    rebuild's shard filter and its tombstones all read it."""
-    changed = changed.persist()
-    try:
-        n_changed = changed.count()
-        if n_changed == 0:
-            return {"batch": None, "shards": 0, "docs": 0,
-                    "changed_shards": 0}
-        if check is not None:
-            check()
-        m = build_index(spark, corpus, path, reindex_shards=changed,
-                        **build_kw)
-    finally:
-        changed.unpersist()
-    m["changed_shards"] = n_changed
+    when no shard changed. The changed ids are collected once, in one
+    action, and passed to :func:`build_index` as a sorted list."""
+    shards = sorted(r["shard"] for r in changed.collect())
+    if not shards:
+        return {"batch": None, "shards": 0, "docs": 0,
+                "changed_shards": 0}
+    if check is not None:
+        check()
+    m = build_index(spark, corpus, path, reindex_shards=shards,
+                    **build_kw)
+    m["changed_shards"] = len(shards)
     return m
 
 
@@ -1074,9 +1069,9 @@ def update_index(
     containing an added/changed/deleted doc is rebuilt from the new
     snapshot in one batch (readers pick the latest build_seq per
     shard). Unchanged shards are untouched — no read, no write. The
-    changed-shard set stays a DataFrame end-to-end — nothing
-    shard-count-sized is ever collected to the driver (the 10^6-shard
-    case shuffles a few MB instead).
+    index-sized diff stays in Spark; only the changed shard ids are
+    collected, once — at most one per shard, as the lineage rows the
+    driver already reads to open the index (10^6 shards: 8 MB).
 
     ``candidate_shards``: optional (shard) DataFrame bounding the diff
     — when the caller KNOWS only these shards can differ (a streaming

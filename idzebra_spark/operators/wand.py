@@ -1142,9 +1142,9 @@ class SegmentIndex:
         terms filter the blocks (``blocks``, when given, narrows them
         first, e.g. to sampled shards), then ONE cogroup with the norms
         runs :func:`_query_kernel` per shard → (query_id, doc_id, raw).
-        No spec → an empty frame, and no job."""
+        No spec → an empty frame the optimizer folds away: no job."""
         if not specs:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
         terms = sorted(set().union(*(s["terms"] for s in specs)))
         blk = (self.blocks if blocks is None else blocks).where(
             F.col("term").isin(terms))

@@ -201,6 +201,31 @@ def test_search_many_one_dictionary_job(spark, seg_idx):
     assert n_again == 0
 
 
+def test_search_on_absent_terms_runs_no_job(spark, seg_idx):
+    """A search, or a batch, whose terms are all absent from the
+    dictionary runs no kernel and no Spark job, and keeps the columns
+    of a search that matches. The parent's empty frame was collected
+    through its sort and limit in one job."""
+    from idzebra_spark.api import ZebraSpark
+
+    zs = ZebraSpark(spark, seg_idx.path)
+    zs.search("window", k=1).collect()  # load meta + stats first
+    n, rows = _jobs_in_group(
+        spark, "t_r3_absent", lambda: zs.search("nosuchterm").collect())
+    assert (n, rows) == (0, [])
+    absent = {"a": "nosuchterm", "b": "nosuchterm AND window",
+              "c": '"nosuch phrase" OR zzqnone'}
+    n, rows = _jobs_in_group(
+        spark, "t_r3_absent_many",
+        lambda: zs.search_many(absent, k=5).collect())
+    assert (n, rows) == (0, [])
+    assert zs.search("nosuchterm").columns == \
+        zs.search("window").columns == ["doc_id", "score_milli"]
+    assert zs.search_many(absent).columns == \
+        zs.search_many({"a": "window"}).columns == \
+        ["query_id", "doc_id", "score_milli"]
+
+
 def test_search_many_mixed_batch_is_one_cogroup(spark, seg_idx):
     """A batch mixing flat and structured queries plans ONE
     cogrouped kernel (two before: one per kind, unioned), and each
