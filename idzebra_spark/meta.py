@@ -8,15 +8,13 @@ each parquet row group's term min/max is a page bound. This module
 reads the small metadata tables on the driver with ``pyarrow``:
 
 - ``lineage`` (shard, batch, build_seq) -> the live (shard, batch)
-  pairs, the live batches, the ``has_reindex`` flag and the next
-  ``build_seq`` (the build, update and compaction writers read their
-  lineage state here too);
+  pairs, the live batches and the next ``build_seq`` (the build,
+  update and compaction writers read their lineage state here too);
 - ``norms`` (shard, batch, n_docs, sum_dl) -> (N, sum of doc lengths);
-- ``dictionary`` (term, df, cf, max_tf) -> exact term lookups, and its
-  ``term`` column -> prefix expansions;
-- ``blocks`` metadata columns (term, shard, batch, n_docs, sum_tf,
-  max_tf) in place of the partials while a partial reindex has left
-  them stale, as :meth:`SegmentIndex.dictionary` does.
+- ``dictionary`` (term, shard, batch, df, cf, max_tf) -> exact term
+  lookups, and its ``term`` column -> prefix expansions. Each row is
+  one shard's totals for one term, so the live (shard, batch) pairs
+  select the current rows even after a partial reindex.
 
 Only live batch directories are listed, only the named columns are
 read, and term reads open only the row groups whose term min/max
@@ -33,10 +31,11 @@ the same columns and filter; the aggregation after the read is shared.
 
 from __future__ import annotations
 
+import operator
 import os
 import re
 from bisect import bisect_right
-from functools import cached_property
+from functools import cached_property, reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -117,9 +116,7 @@ class IndexMeta:
     """Metadata of one committed index, read on the driver.
 
     ``live`` (pandas shard, batch): the latest committed batch per
-    shard. ``batches``: the batches it names. ``has_reindex``: some
-    live batch is only partly live (a later reindex superseded some of
-    its shards), so its dictionary partial is stale. ``next_seq``: the
+    shard. ``batches``: the batches it names. ``next_seq``: the
     ``build_seq`` the next committed batch takes."""
 
     @classmethod
@@ -143,10 +140,14 @@ class IndexMeta:
             ["shard", "batch"]].reset_index(drop=True)
         self.batches = sorted(self.live["batch"].unique())
         self.next_seq = int(lin["build_seq"].max()) + 1 if len(lin) else 0
-        rows = lin["batch"].value_counts()
-        live_rows = self.live["batch"].value_counts()
-        self.has_reindex = bool(
-            (rows[live_rows.index] != live_rows).any())
+        # a batch all of whose committed shards are live is selected by
+        # its partition value alone; one a later reindex partly
+        # superseded also by its live shards
+        shards = lin.groupby("batch")["shard"].nunique()
+        self._live_filter = reduce(operator.or_, (
+            (F.col("batch") == b) if s.nunique() == shards[b] else
+            (F.col("batch") == b) & F.col("shard").isin(sorted(map(int, s)))
+            for b, s in self.live.groupby("batch")["shard"]), F.lit(False))
         self._live_arrow = pa.Table.from_pandas(
             self.live, preserve_index=False).cast(pa.schema(
                 [("shard", pa.int64()), ("batch", pa.string())]))
@@ -159,17 +160,18 @@ class IndexMeta:
 
     def frame(self, table: str, schema=None) -> DataFrame:
         """The live rows of ``table`` as a Spark frame: the table
-        semi-joined to the live (shard, batch) pairs. The read gets
-        ``schema`` (a StructType or DDL string, ``batch`` included),
-        else the schema of one live data file's footer plus ``batch``;
-        Spark infers it (one job) only where pyarrow cannot open the
-        path."""
+        filtered by a predicate on the live (shard, batch) pairs built
+        on the driver (a partition filter; no broadcast, no job). The
+        read gets ``schema`` (a StructType or DDL string, ``batch``
+        included), else the schema of one live data file's footer plus
+        ``batch``; Spark infers it (one job) only where pyarrow cannot
+        open the path."""
         schema = schema or self._file_schema(table)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(f"{self.path}/{table}").join(
-            F.broadcast(self.shard_batch), ["shard", "batch"], "semi")
+        return reader.parquet(f"{self.path}/{table}").where(
+            self._live_filter)
 
     def _file_schema(self, table: str) -> T.StructType | None:
         """Spark schema of a data file of a live batch of ``table``."""
@@ -191,22 +193,15 @@ class IndexMeta:
 
     def lookup(self, terms) -> dict[str, dict]:
         """{term: {df, cf, max_tf}} for the given terms present: the
-        live partials summed per term (max of max_tf), or the live
-        blocks' metadata while the partials are stale."""
+        live dictionary rows summed per term (max of max_tf)."""
         terms = sorted(set(terms))
         if not terms:
             return {}
-        if self.has_reindex:
-            t = self._live_rows(self._table(
-                "blocks", ["term", "shard", "batch", "n_docs", "sum_tf",
-                           "max_tf"], self.batches, terms=terms))
-            t = t.select(["term", "n_docs", "sum_tf", "max_tf"])
-        else:
-            t = self._table("dictionary", ["term", "df", "cf", "max_tf"],
-                            self.batches, terms=terms)
-        t = t.rename_columns(["term", "df", "cf", "max_tf"]).group_by(
-            "term").aggregate([("df", "sum"), ("cf", "sum"),
-                               ("max_tf", "max")])
+        t = self._live_rows(self._table(
+            "dictionary", ["term", "shard", "batch", "df", "cf", "max_tf"],
+            self.batches, terms=terms))
+        t = t.group_by("term").aggregate(
+            [("df", "sum"), ("cf", "sum"), ("max_tf", "max")])
         return {r["term"]: {"df": r["df_sum"], "cf": r["cf_sum"],
                             "max_tf": r["max_tf_max"]}
                 for r in t.to_pylist()}
@@ -216,18 +211,13 @@ class IndexMeta:
         """Dictionary keys in one register that start with ``pattern``
         (the body text when ``field`` is None, else ``field``'s
         composite ``field\\x1fterm`` keys), read as the term range
-        [lo, succ(lo)). Stops once it holds more than ``limit``."""
+        [lo, succ(lo)) of the live dictionary rows. Stops once it holds
+        more than ``limit``."""
         lo = pattern if field is None else field + FIELD_SEP + pattern
-        span = (lo, _succ(lo))
-        if self.has_reindex:
-            table, cols = "blocks", ["term", "shard", "batch"]
-        else:
-            table, cols = "dictionary", ["term"]
         found: set[str] = set()
-        for piece in self._scan(table, cols, self.batches, span=span):
-            if self.has_reindex:
-                piece = self._live_rows(piece)
-            found.update(t for t in piece["term"].to_pylist()
+        for piece in self._scan("dictionary", ["term", "shard", "batch"],
+                                self.batches, span=(lo, _succ(lo))):
+            found.update(t for t in self._live_rows(piece)["term"].to_pylist()
                          if field is not None or FIELD_SEP not in t)
             if len(found) > limit:
                 break

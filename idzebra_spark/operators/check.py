@@ -6,9 +6,11 @@ invariants tie the four segment tables to each other:
 1. ``norms`` vs ``doc_meta``: per-shard doc counts and doclen sums
    must agree (the BM25 norm registers describe exactly the stored
    records).
-2. ``dictionary`` partials vs ``blocks`` metadata: per-term df / cf /
-   max_tf re-derived from live block metadata must equal the merged
-   dictionary the query layer serves.
+2. ``dictionary`` partials vs ``blocks`` metadata: per (shard, term),
+   the live dictionary rows' df / cf / max_tf must equal those
+   re-derived from live block metadata. The dictionary the query layer
+   serves is these rows summed per term, so it is checked too, and a
+   per-shard error cannot cancel out across shards.
 3. ``blocks`` payload decode (the "full" check): every block's
    varint-delta payload must decode to exactly ``n_docs`` strictly
    increasing docids matching the stored first/last bounds, with tf
@@ -37,7 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from idzebra_spark.functions.codec import varint_decode
-from idzebra_spark.operators.segment import read_build_meta
+from idzebra_spark.operators.segment import (
+    DICT_DDL, LINEAGE_DDL, read_build_meta)
 from idzebra_spark.operators.wand import SegmentIndex
 
 _COUNT_SCHEMA = T.StructType([T.StructField("bad", T.LongType())])
@@ -120,17 +123,19 @@ def _check_open(spark: SparkSession, idx: SegmentIndex, path: str,
         .count()
     )
 
-    # 2. served dictionary vs live block metadata
-    blk_agg = idx.blocks.groupBy("term").agg(
+    # 2. live dictionary rows vs live block metadata, per (shard, term)
+    blk_agg = idx.blocks.groupBy("shard", "term").agg(
         F.sum("n_docs").alias("b_df"),
         F.sum("sum_tf").alias("b_cf"),
         F.max("max_tf").alias("b_max"),
     )
-    d = idx.dictionary().select(
-        "term", F.col("df").alias("d_df"), F.col("cf").alias("d_cf"),
-        F.col("max_tf").alias("d_max"))
+    d = idx.meta.frame("dictionary", DICT_DDL).groupBy("shard", "term").agg(
+        F.sum("df").alias("d_df"),
+        F.sum("cf").alias("d_cf"),
+        F.max("max_tf").alias("d_max"),
+    )
     violations["dictionary_vs_blocks"] = (
-        d.join(blk_agg, "term", "full")
+        d.join(blk_agg, ["shard", "term"], "full")
         .where(
             (F.coalesce("d_df", F.lit(-1)) != F.coalesce("b_df", F.lit(-1)))
             | (F.coalesce("d_cf", F.lit(-1)) != F.coalesce("b_cf", F.lit(-1)))
@@ -139,46 +144,6 @@ def _check_open(spark: SparkSession, idx: SegmentIndex, path: str,
         )
         .count()
     )
-
-    # 2b. After a reindex, idx.dictionary() is itself derived from
-    # blocks, making check 2 blocks-vs-blocks (vacuously true). The
-    # persisted dictionary PARTIALS are still exact for every
-    # fully-live batch (no shard superseded), so validate those
-    # per-batch against that batch's own block metadata — coverage
-    # does not silently vanish in exactly the post-update state.
-    if idx._has_reindex:
-        lineage = spark.read.parquet(f"{path}/lineage")
-        per_total = lineage.groupBy("batch").agg(F.count("*").alias("t"))
-        per_live = idx.shard_batch.groupBy("batch").agg(
-            F.count("*").alias("l"))
-        full_live = per_live.join(per_total, "batch") \
-            .where(F.col("t") == F.col("l")).select("batch")
-        dict_part = (
-            spark.read.parquet(f"{path}/dictionary")
-            .join(F.broadcast(full_live), "batch", "semi")
-            .groupBy("batch", "term")
-            .agg(F.sum("df").alias("d_df"), F.sum("cf").alias("d_cf"),
-                 F.max("max_tf").alias("d_max"))
-        )
-        blk_part = (
-            spark.read.parquet(f"{path}/blocks")
-            .join(F.broadcast(full_live), "batch", "semi")
-            .groupBy("batch", "term")
-            .agg(F.sum("n_docs").alias("b_df"), F.sum("sum_tf").alias("b_cf"),
-                 F.max("max_tf").alias("b_max"))
-        )
-        violations["dictionary_partials_vs_blocks"] = (
-            dict_part.join(blk_part, ["batch", "term"], "full")
-            .where(
-                (F.coalesce("d_df", F.lit(-1))
-                 != F.coalesce("b_df", F.lit(-1)))
-                | (F.coalesce("d_cf", F.lit(-1))
-                   != F.coalesce("b_cf", F.lit(-1)))
-                | (F.coalesce("d_max", F.lit(-1))
-                   != F.coalesce("b_max", F.lit(-1)))
-            )
-            .count()
-        )
 
     # 3. full payload decode
     if full:
@@ -193,10 +158,8 @@ def _check_open(spark: SparkSession, idx: SegmentIndex, path: str,
     # norms rows must belong to live (shard, batch) pairs — the latter
     # holds by construction (idx.norms is lineage-filtered), so check
     # the forward direction against the lineage metrics.
-    lineage = spark.read.parquet(f"{path}/lineage")
-    live = lineage.join(
-        idx.shard_batch, ["shard", "batch"], "semi"
-    ).where(F.col("docs_indexed") > 0).select("shard")
+    live = idx.meta.frame("lineage", LINEAGE_DDL) \
+        .where(F.col("docs_indexed") > 0).select("shard")
     violations["lineage_vs_norms"] = (
         live.join(idx.norms.select("shard"), "shard", "left_anti").count()
     )

@@ -82,7 +82,7 @@ class MultiSegmentIndex(SegmentIndex):
 
     Every query method of :class:`SegmentIndex` works unchanged; the
     facade only swaps the underlying segment tables for unions with
-    disjoint shard ids and re-merges the dictionary partials. Updates
+    disjoint shard ids and re-merges the members' dictionaries. Updates
     go through the member indexes (this handle is a reader)."""
 
     def __init__(self, spark: SparkSession, paths: list[str],
@@ -107,13 +107,12 @@ class MultiSegmentIndex(SegmentIndex):
             [shift(s.blocks, i) for i, s in enumerate(self.subs)])
         self.norms = union_all(
             [shift(s.norms, i) for i, s in enumerate(self.subs)])
-        self._has_reindex = any(s._has_reindex for s in self.subs)
         self._init_serving(cache_hot)
 
-    # global (term, df, cf, max_tf): second-stage merge over the
-    # members' own merged dictionaries — df sums across databases so
-    # idf matches the single merged index exactly
     def dictionary(self) -> DataFrame:
+        """Global (term, df, cf, max_tf): a second-stage merge over the
+        members' own merged live dictionaries — df sums across
+        databases, so idf matches the single merged index exactly."""
         dicts = [s.dictionary() for s in self.subs]
         u = reduce(lambda a, b: a.unionByName(b), dicts)
         return u.groupBy("term").agg(

@@ -29,15 +29,19 @@ On-disk layout (all parquet, under ``path/``):
   delta varint positions; first/last docid + max_tf are the
   block-max metadata driving WAND pruning. Files are range-partitioned
   and sorted by term so parquet min/max stats prune scans by term.
-- ``norms/batch=<id>/``      (shard, n_docs, min_dl, docids_bin,
-                              doclens_bin) — per-shard doc lengths
-  (BM25 norms), the analogue of Zebra's sort/zinfo doc stats.
-- ``dictionary/batch=<id>/`` (term, df, cf, max_tf, n_blocks) —
-  per-batch partials; global dictionary = groupBy(term).sum — the
-  second-stage merge mirroring kinput.c's heap merge.
-- ``doc_meta/batch=<id>/``   (shard, doc_id, doclen, sha256) — the
-  per-row content-sha256 invariant carrier.
-- ``stats/batch=<id>/``      (n_docs, sum_dl, n_postings) partials.
+- ``norms/batch=<id>/``      (shard, n_docs, min_dl, sum_dl,
+                              docids_bin, doclens_bin) — per-shard doc
+  lengths (BM25 norms), the analogue of Zebra's sort/zinfo doc stats;
+  N and avgdl are summed from the live rows (no stats table).
+- ``dictionary/batch=<id>/`` (term, shard, df, cf, max_tf, n_blocks)
+  — per-batch partials, one row per (shard, term) of the batch's
+  blocks, range-partitioned and sorted by term. The global dictionary
+  = the live (shard, batch) rows summed per term — the second-stage
+  merge mirroring kinput.c's heap merge — and stays exact after a
+  partial reindex, which supersedes whole shards.
+- ``doc_meta/batch=<id>/``   (shard, doc_id, doclen, sha256[,
+                              match_key]) — the per-row content-sha256
+  invariant carrier.
 - ``lineage/``               (batch, build_seq, shard, docs_indexed,
                               postings_emitted, bytes_compressed)
   — written LAST, one row per completed shard. A batch exists iff its
@@ -103,7 +107,8 @@ NORMS_SCHEMA = T.StructType([
     T.StructField("doclens_bin", T.BinaryType()),
 ])
 
-DICT_DDL = "term string, df long, cf long, max_tf int, n_blocks long"
+DICT_DDL = ("term string, shard long, df long, cf long, max_tf int, "
+            "n_blocks long, batch string")
 LINEAGE_DDL = ("shard long, docs_indexed long, postings_emitted long, "
                "bytes_compressed long, batch string, build_seq int")
 
@@ -488,13 +493,14 @@ def _batch_blocks(spark: SparkSession, path: str, batch: str) -> DataFrame:
 
 
 def _write_dictionary(blocks: DataFrame, path: str, batch: str) -> None:
-    """Write a batch's dictionary partial — per-term totals of its
-    ``blocks`` (the second-stage merge across batches happens at
-    load/query time, as kinput.c's heap merge). Range-partitioned and
-    sorted by term, so every file's row groups are term-bounded and
-    the driver-side reader prunes them by term min/max."""
+    """Write a batch's dictionary partial — per-(shard, term) totals
+    of its ``blocks`` (the second-stage merge across the live shards
+    happens at load/query time, as kinput.c's heap merge).
+    Range-partitioned by term and sorted by (term, shard), so every
+    file's row groups are term-bounded and the driver-side reader
+    prunes them by term min/max."""
     (
-        blocks.groupBy("term")
+        blocks.groupBy("term", "shard")
         .agg(
             F.sum("n_docs").alias("df"),
             F.sum("sum_tf").alias("cf"),
@@ -503,7 +509,7 @@ def _write_dictionary(blocks: DataFrame, path: str, batch: str) -> None:
         )
         .withColumn("batch", F.lit(batch))
         .repartitionByRange(8, "term")
-        .sortWithinPartitions("term")
+        .sortWithinPartitions("term", "shard")
         .write.mode("append")
         .partitionBy("batch")
         .parquet(f"{path}/dictionary")
@@ -790,9 +796,6 @@ def build_index(
     )
     _write_dictionary(written, path, batch)
 
-    # (no separate stats table: SegmentIndex derives N/avgdl from the
-    # per-shard norms rows, which stay exact across shard reindexes)
-
     # lineage LAST = the commit record (shadow-page flip,
     # bfile/commit.c semantics), planned on the driver from ONE
     # per-shard collect of the two cached frames. Every requested shard
@@ -1068,7 +1071,7 @@ def update_index(
     against the indexed doc_meta by (doc_id, sha256); every shard
     containing an added/changed/deleted doc is rebuilt from the new
     snapshot in one batch (readers pick the latest build_seq per
-    shard). Unchanged shards are untouched — no read, no write. The
+    shard, for its dictionary rows too). Unchanged shards are untouched — no read, no write. The
     index-sized diff stays in Spark; only the changed shard ids are
     collected, once — at most one per shard, as the lineage rows the
     driver already reads to open the index (10^6 shards: 8 MB).

@@ -878,14 +878,8 @@ class SegmentIndex:
         self.path = path
         # The live set — the latest committed batch per shard (an
         # update/reindex wins by build_seq) — is read on the driver,
-        # with no Spark job. The per-batch dictionary partials are
-        # exact iff every LIVE batch is FULLY live (none of its shards
-        # were superseded by a later reindex). Checking partial
-        # liveness — not raw version counts — means compaction
-        # restores the fast path (the compacted batch covers every
-        # shard).
+        # with no Spark job.
         self.meta = IndexMeta(spark, path)
-        self._has_reindex = self.meta.has_reindex
         self.shard_batch = self.meta.shard_batch
         self.blocks = self.meta.frame("blocks", with_batch(BLOCK_SCHEMA))
         self.norms = self.meta.frame("norms", with_batch(NORMS_SCHEMA))
@@ -923,30 +917,16 @@ class SegmentIndex:
         return self._stats
 
     def dictionary(self) -> DataFrame:
-        """Global (term, df, cf, max_tf) as a Spark frame — merged
-        batch partials (the kinput.c:709 heap-merge, as a groupBy).
-        After a shard reindex the partials are stale, so fall back to
-        aggregating block metadata (shard-filtered, no payload
-        decode). Serving lookups do not use it: exact terms and
-        prefixes are driver-side Arrow reads of the same rows
-        (:mod:`idzebra_spark.meta`); it backs scans, ``info()`` and
-        the non-prefix wildcard grep."""
-        if self._has_reindex:
-            return self.blocks.groupBy("term").agg(
-                F.sum("n_docs").alias("df"),
-                F.sum("sum_tf").alias("cf"),
-                F.max("max_tf").alias("max_tf"),
-            )
-        return (
-            self.spark.read.schema(DICT_DDL + ", batch string")
-            .parquet(f"{self.path}/dictionary")
-            .where(F.col("batch").isin(self.meta.batches))
-            .groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.sum("cf").alias("cf"),
-                F.max("max_tf").alias("max_tf"),
-            )
+        """Global (term, df, cf, max_tf) as a Spark frame — the live
+        (shard, term) rows of the batch partials merged per term (the
+        kinput.c:709 heap-merge, as a groupBy). Serving lookups do not
+        use it: exact terms and prefixes are driver-side Arrow reads of
+        the same rows (:mod:`idzebra_spark.meta`); it backs scans,
+        ``info()`` and the non-prefix wildcard grep."""
+        return self.meta.frame("dictionary", DICT_DDL).groupBy("term").agg(
+            F.sum("df").alias("df"),
+            F.sum("cf").alias("cf"),
+            F.max("max_tf").alias("max_tf"),
         )
 
     def doc_meta(self) -> DataFrame:

@@ -1,21 +1,28 @@
 #!/usr/bin/env python
 """Driver-side metadata reads against Spark collects of the same rows.
 
-Builds a ``synth_source_files`` index (5,000 docs by default), then
-times three metadata operations two ways, each on a warm JVM:
+Builds a ``synth_source_files`` index (5,000 docs by default) and
+probes it in two states: ``fresh`` (one fully live batch) and
+``reindexed`` (an update rewrote one shard, so the build batch is only
+partly live). In each state it times three metadata operations, each
+on a warm JVM:
 
 - ``open_stats``: a ``SegmentIndex`` open plus ``stats()`` (the
   driver-side reader) against Spark collects of the lineage
   (shard, batch, build_seq) and live norms (shard, batch, n_docs,
   sum_dl) rows;
 - ``lookup``: one exact term through ``IndexMeta.lookup`` against a
-  Spark collect of its dictionary rows;
+  Spark aggregate of its live (shard, batch) dictionary rows, and
+  against the live ``blocks`` metadata aggregated on the driver (the
+  path a per-term dictionary needs after a partial reindex);
 - ``prefix``: one prefix expansion through ``IndexMeta.prefix``
-  against a Spark collect of the term range's dictionary rows.
+  against the distinct terms of the range's live dictionary rows
+  (Spark) and of its live ``blocks`` metadata (driver).
 
 Each op also counts the Spark jobs it ran (status tracker, one job
-group per op). Both sides must return the same rows. The JSON names
-the machine: core count, master, and pyarrow/pyspark versions.
+group per op), and the reader's ops record which tables they opened.
+Every side must return the same rows. The JSON names the machine:
+core count, master, and pyarrow/pyspark versions.
 
 Usage: python scripts/probe_meta_plane.py [--docs 5000] [--reps 7]
        [--out PERF_meta_plane.json]
@@ -55,10 +62,13 @@ def main() -> None:
         p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
     import pyarrow
+    import pyarrow.compute as pc
     import pyspark
+    from pyspark.sql import functions as F
 
     from idzebra_spark.api import ZebraSpark
     from idzebra_spark.meta import IndexMeta, _succ
+    from idzebra_spark.operators.segment import DICT_DDL
     from idzebra_spark.operators.wand import SegmentIndex
     from idzebra_spark.session import get_spark
     from idzebra_spark.sources.corpus import synth_source_files
@@ -68,69 +78,119 @@ def main() -> None:
     sc = spark.sparkContext
     path = tempfile.mkdtemp(prefix="meta_plane_") + "/idx"
     corpus = synth_source_files(spark, docs_n).select("doc_id", "content")
-    ZebraSpark(spark, path, text_col="content").build(corpus)
+    z = ZebraSpark(spark, path, text_col="content")
+    z.build(corpus)
+
+    opened: list[str] = []
+    real_files = IndexMeta._files
+
+    def files(self, table, batches):
+        opened.append(table)
+        return real_files(self, table, batches)
+
+    IndexMeta._files = files
 
     def timed(fn):
         group = f"probe-{uuid.uuid4().hex}"
         sc.setJobGroup(group, "probe_meta_plane")
+        opened.clear()
         t0 = time.perf_counter()
         try:
             out = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         dt = time.perf_counter() - t0
-        return dt, len(sc.statusTracker().getJobIdsForGroup(group)), out
+        return (dt, len(sc.statusTracker().getJobIdsForGroup(group)),
+                sorted(set(opened)), out)
 
-    meta = IndexMeta(spark, path)
-    span = (PREFIX, _succ(PREFIX))
+    def probe(meta: IndexMeta) -> dict:
+        lo, hi = PREFIX, _succ(PREFIX)
+        dictionary = meta.frame("dictionary", DICT_DDL)
 
-    def reader_open_stats():
-        return SegmentIndex(spark, path).stats()
+        def reader_open_stats():
+            return SegmentIndex(spark, path).stats()
 
-    def spark_open_stats():
-        lin = meta._spark_rows("lineage", ["shard", "batch", "build_seq"],
-                               None, None, None)
-        norms = meta._spark_rows("norms", ["shard", "batch", "n_docs",
-                                           "sum_dl"], meta.batches,
-                                 None, None)
-        n = sum(norms["n_docs"].to_pylist())
-        return lin.num_rows, (n, sum(norms["sum_dl"].to_pylist()) / n)
+        def spark_open_stats():
+            lin = meta._spark_rows("lineage",
+                                   ["shard", "batch", "build_seq"],
+                                   None, None, None)
+            norms = meta._live_rows(meta._spark_rows(
+                "norms", ["shard", "batch", "n_docs", "sum_dl"],
+                meta.batches, None, None))
+            n = pc.sum(norms["n_docs"]).as_py()
+            return lin.num_rows, (n, pc.sum(norms["sum_dl"]).as_py() / n)
 
-    def spark_lookup():
-        t = meta._spark_rows("dictionary", ["term", "df", "cf", "max_tf"],
-                             meta.batches, [TERM], None)
-        return {r["term"]: {k: r[k] for k in ("df", "cf", "max_tf")}
-                for r in t.to_pylist()}
+        def spark_lookup():
+            return {r["term"]: {k: r[k] for k in ("df", "cf", "max_tf")}
+                    for r in dictionary.where(F.col("term") == TERM)
+                    .groupBy("term").agg(F.sum("df").alias("df"),
+                                         F.sum("cf").alias("cf"),
+                                         F.max("max_tf").alias("max_tf"))
+                    .collect()}
 
-    def spark_prefix():
-        t = meta._spark_rows("dictionary", ["term"], meta.batches, None,
-                             span)
-        return set(t["term"].to_pylist())
+        def blocks_lookup():
+            t = meta._live_rows(meta._table(
+                "blocks", ["term", "shard", "batch", "n_docs", "sum_tf",
+                           "max_tf"], meta.batches, terms=[TERM]))
+            t = t.group_by("term").aggregate(
+                [("n_docs", "sum"), ("sum_tf", "sum"), ("max_tf", "max")])
+            return {r["term"]: {"df": r["n_docs_sum"], "cf": r["sum_tf_sum"],
+                                "max_tf": r["max_tf_max"]}
+                    for r in t.to_pylist()}
 
-    ops = {
-        "open_stats": (reader_open_stats, spark_open_stats),
-        "lookup": (lambda: meta.lookup([TERM]), spark_lookup),
-        "prefix": (lambda: meta.prefix(None, PREFIX, 10000), spark_prefix),
-    }
-    # warm both paths once (JVM codegen, imports) before timing
-    for reader, via_spark in ops.values():
-        reader(), via_spark()
-    result = {}
-    for name, (reader, via_spark) in ops.items():
-        row = {}
-        for side, fn in (("reader", reader), ("spark", via_spark)):
-            runs = [timed(fn) for _ in range(reps)]
-            row[f"{side}_s"] = [round(r[0], 5) for r in runs]
-            row[f"{side}_median_s"] = round(
-                statistics.median(r[0] for r in runs), 5)
-            row[f"{side}_jobs"] = max(r[1] for r in runs)
-            row[f"_{side}_out"] = runs[-1][2]
-        want = row.pop("_spark_out")
-        got = row.pop("_reader_out")
-        if name == "open_stats":
-            want = want[1]
-        assert got and got == want, (name, got, want)
-        result[name] = row
+        def spark_prefix():
+            return {r["term"] for r in dictionary.where(
+                (F.col("term") >= lo) & (F.col("term") < hi))
+                .select("term").distinct().collect()}
+
+        def blocks_prefix():
+            found = set()
+            for piece in meta._scan("blocks", ["term", "shard", "batch"],
+                                    meta.batches, span=(lo, hi)):
+                found.update(meta._live_rows(piece)["term"].to_pylist())
+            return found
+
+        ops = {
+            "open_stats": {"reader": reader_open_stats,
+                           "spark": spark_open_stats},
+            "lookup": {"reader": lambda: meta.lookup([TERM]),
+                       "spark": spark_lookup, "blocks": blocks_lookup},
+            "prefix": {"reader": lambda: meta.prefix(None, PREFIX, 10000),
+                       "spark": spark_prefix, "blocks": blocks_prefix},
+        }
+        # warm every path once (JVM codegen, imports) before timing
+        for sides in ops.values():
+            for fn in sides.values():
+                fn()
+        result = {}
+        for name, sides in ops.items():
+            row, outs = {}, {}
+            for side, fn in sides.items():
+                runs = [timed(fn) for _ in range(reps)]
+                row[f"{side}_s"] = [round(r[0], 5) for r in runs]
+                row[f"{side}_median_s"] = round(
+                    statistics.median(r[0] for r in runs), 5)
+                row[f"{side}_jobs"] = max(r[1] for r in runs)
+                outs[side] = runs[-1][3]
+                if side == "reader":
+                    row["reader_tables"] = runs[-1][2]
+            if name == "open_stats":
+                outs["spark"] = outs["spark"][1]
+            want = outs.pop("reader")
+            assert want and all(o == want for o in outs.values()), \
+                (name, want, outs)
+            result[name] = row
+        return {"live_batches": len(meta.batches),
+                "live_pairs": len(meta.live),
+                "prefix_fanout": len(meta.prefix(None, PREFIX, 10000)),
+                "ops": result}
+
+    states = {"fresh": probe(IndexMeta(spark, path))}
+    # rewrite shard 0 only: the build batch stays live for the others
+    z.update(corpus.withColumn("content", F.when(
+        F.col("doc_id") == 1, F.concat("content", F.lit(" block")))
+        .otherwise(F.col("content"))))
+    states["reindexed"] = probe(IndexMeta(spark, path))
 
     report = {
         "probe": "scripts/probe_meta_plane.py",
@@ -145,9 +205,7 @@ def main() -> None:
         "reps": reps,
         "term": TERM,
         "prefix": PREFIX,
-        "prefix_fanout": len(meta.prefix(None, PREFIX, 10000)),
-        "live_batches": len(meta.batches),
-        "ops": result,
+        "states": states,
     }
     with open(out_path, "w") as fh:
         json.dump(report, fh, indent=2)

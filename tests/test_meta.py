@@ -25,6 +25,15 @@ def _corpus(spark):
         "doc_id", "content", "lang")
 
 
+def _edited(corpus):
+    """The partial update's snapshot: doc 7 deleted, docs 0-4 edited
+    (all in shard 0)."""
+    return corpus.where(F.col("doc_id") != 7).withColumn(
+        "content", F.when(F.col("doc_id") < 5,
+                          F.concat("content", F.lit(" zzqmarker")))
+        .otherwise(F.col("content")))
+
+
 @pytest.fixture(scope="module")
 def states(spark, tmp_path_factory):
     """Index paths per state: a fresh build, a partial update of it
@@ -41,11 +50,7 @@ def states(spark, tmp_path_factory):
     corpus = _corpus(spark)
     build_index(spark, corpus, fresh, **kw)
     shutil.copytree(fresh, partial)
-    edited = corpus.where(F.col("doc_id") != 7).withColumn(
-        "content", F.when(F.col("doc_id") < 5,
-                          F.concat("content", F.lit(" zzqmarker")))
-        .otherwise(F.col("content")))
-    update_index(spark, edited, partial, **kw)
+    update_index(spark, _edited(corpus), partial, **kw)
     shutil.copytree(partial, compacted)
     compact_index(spark, compacted)
     return {"fresh": fresh, "partial": partial, "compacted": compacted}
@@ -74,6 +79,20 @@ def _jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
+def _dictionary_rows(frame):
+    return sorted(tuple(r) for r in
+                  frame.select("term", "df", "cf", "max_tf").collect())
+
+
+def _dictionary_state(idx):
+    """The dictionary three ways: dictionary() rows, driver lookups of
+    every term (and one absent), and driver prefix expansions."""
+    rows = _dictionary_rows(idx.dictionary())
+    terms = [r[0] for r in rows] + ["nosuchtokenanywhere"]
+    return (rows, idx.meta.lookup(terms),
+            [sorted(idx.meta.prefix(f, p, 10 ** 6)) for p, f in PREFIXES])
+
+
 def _grep(idx, pat, field):
     from idzebra_spark.operators.wand import _pattern_cond
 
@@ -84,11 +103,15 @@ def _grep(idx, pat, field):
 
 @pytest.mark.parametrize("name", ["fresh", "partial", "compacted", "multi"])
 def test_reader_matches_spark_tables(spark, states, name):
-    """Lookups equal dictionary() for every term, prefix expansions
-    (body and fielded registers) equal a _pattern_cond grep, and
-    stats() equals the norms aggregate."""
+    """dictionary() equals the live blocks' metadata summed per term,
+    lookups equal dictionary() for every term, prefix expansions (body
+    and fielded registers) equal a _pattern_cond grep, and stats()
+    equals the norms aggregate."""
     idx = _open(spark, states, name)
-    assert idx._has_reindex == (name in ("partial", "multi"))
+    assert _dictionary_rows(idx.dictionary()) == _dictionary_rows(
+        idx.blocks.groupBy("term").agg(
+            F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("cf"),
+            F.max("max_tf").alias("max_tf")))
     want = {r["term"]: {"df": r["df"], "cf": r["cf"], "max_tf": r["max_tf"]}
             for r in idx.dictionary().collect()}
     assert idx.meta.lookup(list(want) + ["nosuchtokenanywhere"]) == want
@@ -101,6 +124,93 @@ def test_reader_matches_spark_tables(spark, states, name):
                       F.sum("sum_dl").alias("s")).collect()[0]
     assert idx.stats() == (n["n"], n["s"] / n["n"])
     assert len(idx.meta.live) == idx.shard_batch.count()
+
+
+@pytest.mark.parametrize("name", ["fresh", "partial"])
+def test_fresh_handle_topk_runs_no_broadcast_job(spark, states, name):
+    """A fresh handle selects the live rows of blocks and norms with a
+    predicate built on the driver, not a semi-join to a broadcast local
+    frame, so its first top-k runs at most 5 Spark jobs (the semi-join
+    cost a sixth) and still returns the brute-force rows of the index's
+    snapshot."""
+    from idzebra_spark.operators.bruteforce import bm25_topk
+    from idzebra_spark.operators.wand import SegmentIndex
+
+    terms = ["zzqmarker", "sort"]
+    n, got = _jobs(spark, lambda: [
+        (r.doc_id, r.score_milli) for r in
+        SegmentIndex(spark, states[name]).topk(terms, 5).collect()])
+    assert n <= 5, n
+    corpus = _corpus(spark)
+    snapshot = corpus if name == "fresh" else _edited(corpus)
+    assert got == [(r.doc_id, r.score_milli) for r in bm25_topk(
+        snapshot, terms, 5, text_col="content").collect()]
+
+
+def test_dictionary_exact_after_two_partial_updates(spark, tmp_path,
+                                                    monkeypatch):
+    """Build, update one of 10 shards, then update that shard and one
+    other: the second update lowers the top tf of one term and deletes
+    the only doc holding another. dictionary(), lookups and prefixes
+    then equal, in every column, both a fresh rebuild of the same
+    snapshot and the compacted index, and the lookups and prefixes
+    open no blocks file."""
+    from idzebra_spark.meta import IndexMeta
+    from idzebra_spark.operators.segment import (
+        build_index, compact_index, update_index)
+    from idzebra_spark.operators.wand import SegmentIndex
+
+    kw = dict(text_col="content", shard_size=64, block_size=32,
+              fields={"p": ["lang"]})
+    corpus = _corpus(spark)
+
+    def edit(df, extra):
+        c = F.col("content")
+        for doc, words in extra.items():
+            c = F.when(F.col("doc_id") == doc,
+                       F.concat("content", F.lit(words))).otherwise(c)
+        return df.withColumn("content", c)
+
+    path, rebuilt, compacted = (str(tmp_path / n) for n in
+                                ("idx", "rebuilt", "compacted"))
+    build_index(spark, corpus, path, **kw)
+    # shard 2 only
+    update_index(spark, edit(corpus, {130: " zzqtop zzqtop zzqtop",
+                                      131: " zzqlone", 140: " zzqtop"}),
+                 path, **kw)
+    before = IndexMeta(spark, path).lookup(["zzqtop", "zzqlone"])
+    assert before["zzqtop"]["max_tf"] == 3
+    assert before["zzqlone"]["df"] == 1
+    # shard 2 again (doc 130 loses its repeats, doc 131 is deleted) and
+    # shard 5 (doc 330 gains the term)
+    snapshot = edit(corpus.where(F.col("doc_id") != 131),
+                    {140: " zzqtop", 330: " zzqtop"})
+    assert update_index(spark, snapshot, path, **kw)["changed_shards"] == 2
+    build_index(spark, snapshot, rebuilt, **kw)
+    shutil.copytree(path, compacted)
+    compact_index(spark, compacted)
+
+    want = _dictionary_state(SegmentIndex(spark, rebuilt))
+    assert _dictionary_state(SegmentIndex(spark, compacted)) == want
+    idx = SegmentIndex(spark, path)
+    assert _dictionary_state(idx) == want
+    after = idx.meta.lookup(["zzqtop", "zzqlone"])
+    assert after == {"zzqtop": {"df": 2, "cf": 2, "max_tf": 1}}
+
+    opened = []
+    real = IndexMeta._files
+
+    def spy(self, table, batches):
+        opened.append(table)
+        return real(self, table, batches)
+
+    monkeypatch.setattr(IndexMeta, "_files", spy)
+    m = IndexMeta(spark, path)
+    opened.clear()
+    m.lookup(["zzqtop", "block"])
+    m.prefix(None, "zzq", 10)
+    m.prefix("lang", "p", 10)
+    assert set(opened) == {"dictionary"}, opened
 
 
 def test_open_stats_and_lookup_run_no_job(spark, states):
@@ -203,9 +313,9 @@ def test_noop_resume_build_runs_few_jobs(spark, states, tmp_path):
 
 
 def test_reader_never_requests_payload_columns(spark, states, monkeypatch):
-    """Open, stats, lookups and prefix reads — over the partials and
-    over the block metadata of a partly-live index — request only
-    metadata columns."""
+    """Open, stats, lookups and prefix reads — of a fresh and of a
+    partly-live index — read only lineage, norms and dictionary
+    metadata columns, never the blocks table."""
     from idzebra_spark.meta import IndexMeta
 
     requested = []
@@ -221,7 +331,7 @@ def test_reader_never_requests_payload_columns(spark, states, monkeypatch):
         idx.stats()
         idx.resolve(["return", "block"], [("prefix", "sh", None, 1, None)])
     tables = {t for t, _ in requested}
-    assert {"lineage", "norms", "dictionary", "blocks"} <= tables
+    assert tables == {"lineage", "norms", "dictionary"}
     assert not PAYLOAD & {c for _, cols in requested for c in cols}
 
 
@@ -236,11 +346,13 @@ def test_fallback_reads_the_same_rows(spark, states, monkeypatch):
         terms = ["return", "block", "zzqmarker", "nosuchtoken",
                  "lang" + FIELD_SEP + "go"]
         return (m.live.sort_values(["shard", "batch"]).values.tolist(),
-                m.batches, m.has_reindex, m.totals(), m.lookup(terms),
+                m.batches, m.totals(), m.lookup(terms),
                 [sorted(m.prefix(f, p, 10000)) for p, f in PREFIXES])
 
     direct = {n: results(IndexMeta(spark, states[n])) for n in
-              ("fresh", "partial")}
+              ("fresh", "partial", "compacted")}
+    # the partly-live index and its compaction hold the same snapshot
+    assert direct["partial"][2:] == direct["compacted"][2:]
 
     class NoFS:
         @staticmethod

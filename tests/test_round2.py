@@ -478,19 +478,27 @@ def test_positions_error_is_clear(spark, tmp_path):
 
 
 def test_compact_restores_dictionary_fast_path(spark, corpus, tmp_path):
+    """After a partial update, and after compacting it, the dictionary,
+    lookups and prefixes equal a fresh rebuild of the same snapshot."""
     from idzebra_spark.operators.segment import compact_index, update_index
 
-    path = str(tmp_path / "cidx")
+    def state(idx):
+        rows = sorted(tuple(r) for r in idx.dictionary().collect())
+        return (rows, idx.meta.lookup([r[0] for r in rows]),
+                sorted(idx.meta.prefix(None, "", 1000)))
+
+    path, rebuilt = str(tmp_path / "cidx"), str(tmp_path / "rebuilt")
     build_index(spark, corpus, path, shard_size=2, block_size=4)
-    assert not SegmentIndex(spark, path)._has_reindex
     changed = corpus.withColumn(
         "text", F.when(F.col("doc_id") == 0,
                        F.lit("totally new words")).otherwise(F.col("text")))
     update_index(spark, changed, path, shard_size=2, block_size=4)
-    assert SegmentIndex(spark, path)._has_reindex  # partial batches live
+    build_index(spark, changed, rebuilt, shard_size=2, block_size=4)
+    want = state(SegmentIndex(spark, rebuilt))
+    assert state(SegmentIndex(spark, path)) == want
     compact_index(spark, path)
     idx = SegmentIndex(spark, path)
-    assert not idx._has_reindex  # compaction made one fully-live batch
+    assert state(idx) == want
     assert sorted(r["doc_id"] for r in idx.eval_tree(
         ("term", "totally")).collect()) == [0]
 

@@ -204,9 +204,10 @@ class TestFacadeRollback:
 
 class TestCheckAfterReindex:
     def test_dictionary_partials_checked(self, spark, keyed_docs):
-        """check.py ADVICE fix: after a reindex, check 2 is vacuous
-        (dictionary() derives from blocks) — the new partials check
-        must cover fully-live batches and catch a corrupted partial."""
+        """After a reindex, check 2 compares the live dictionary rows
+        with the live block metadata per (shard, term), so it passes
+        on the updated index and catches a corrupted partial of the
+        reindex batch."""
         from idzebra_spark.operators.check import check_index
 
         base = tempfile.mkdtemp(prefix="idz_chk_")
@@ -220,7 +221,7 @@ class TestCheckAfterReindex:
         update_index(spark, upd, p)
         rep = check_index(spark, p, full=False)
         assert rep["ok"], rep
-        assert "dictionary_partials_vs_blocks" in rep["violations"]
+        assert "dictionary_vs_blocks" in rep["violations"]
 
         # corrupt the reindex batch's dictionary partial → must fire
         import glob
@@ -241,5 +242,5 @@ class TestCheckAfterReindex:
 
         pq.write_table(pa.Table.from_pandas(pdf, schema=tbl.schema), part)
         rep2 = check_index(spark, p, full=False)
-        assert rep2["violations"]["dictionary_partials_vs_blocks"] > 0
+        assert rep2["violations"]["dictionary_vs_blocks"] > 0
         shutil.rmtree(base, ignore_errors=True)
