@@ -10,11 +10,14 @@ reads the small metadata tables on the driver with ``pyarrow``:
 - ``lineage`` (shard, batch, build_seq) -> the live (shard, batch)
   pairs, the live batches and the next ``build_seq`` (the build,
   update and compaction writers read their lineage state here too);
-- ``norms`` (shard, batch, n_docs, sum_dl) -> (N, sum of doc lengths);
+- ``norms`` (shard, batch, n_docs, sum_dl) -> (N, sum of doc lengths)
+  and each live shard's doc count;
 - ``dictionary`` (term, shard, batch, df, cf, max_tf) -> exact term
   lookups, and its ``term`` column -> prefix expansions. Each row is
   one shard's totals for one term, so the live (shard, batch) pairs
-  select the current rows even after a partial reindex.
+  select the current rows even after a partial reindex, and both
+  reads also name the live shards that hold each term: the shards a
+  query must read.
 
 Only live batch directories are listed, only the named columns are
 read, and term reads open only the row groups whose term min/max
@@ -191,9 +194,18 @@ class IndexMeta:
         return (pc.sum(t["n_docs"]).as_py() or 0,
                 pc.sum(t["sum_dl"]).as_py() or 0)
 
-    def lookup(self, terms) -> dict[str, dict]:
-        """{term: {df, cf, max_tf}} for the given terms present: the
-        live dictionary rows summed per term (max of max_tf)."""
+    def shard_docs(self) -> dict[int, int]:
+        """{live shard: n_docs} from the live norms rows."""
+        t = self._live_rows(self._table(
+            "norms", ["shard", "batch", "n_docs"], self.batches))
+        t = t.group_by("shard").aggregate([("n_docs", "sum")])
+        return dict(zip(t["shard"].to_pylist(), t["n_docs_sum"].to_pylist()))
+
+    def locate(self, terms) -> dict[str, dict]:
+        """{term: {df, cf, max_tf, shards}} for the given terms present:
+        the live dictionary rows summed per term (max of max_tf), and
+        the sorted ids of the live shards those rows come from — the
+        shards a query on the term must read."""
         terms = sorted(set(terms))
         if not terms:
             return {}
@@ -201,27 +213,37 @@ class IndexMeta:
             "dictionary", ["term", "shard", "batch", "df", "cf", "max_tf"],
             self.batches, terms=terms))
         t = t.group_by("term").aggregate(
-            [("df", "sum"), ("cf", "sum"), ("max_tf", "max")])
+            [("df", "sum"), ("cf", "sum"), ("max_tf", "max"),
+             ("shard", "list")])
         return {r["term"]: {"df": r["df_sum"], "cf": r["cf_sum"],
-                            "max_tf": r["max_tf_max"]}
+                            "max_tf": r["max_tf_max"],
+                            "shards": tuple(sorted(r["shard_list"]))}
                 for r in t.to_pylist()}
 
+    def lookup(self, terms) -> dict[str, dict]:
+        """{term: {df, cf, max_tf}}: :meth:`locate` without the shards."""
+        return without_shards(self.locate(terms))
+
     def prefix(self, field: str | None, pattern: str,
-               limit: int) -> set[str]:
-        """Dictionary keys in one register that start with ``pattern``
-        (the body text when ``field`` is None, else ``field``'s
-        composite ``field\\x1fterm`` keys), read as the term range
-        [lo, succ(lo)) of the live dictionary rows. Stops once it holds
-        more than ``limit``."""
+               limit: int) -> dict[str, tuple[int, ...]]:
+        """{key: sorted live shard ids holding it} for the dictionary
+        keys in one register that start with ``pattern`` (the body text
+        when ``field`` is None, else ``field``'s composite
+        ``field\\x1fterm`` keys), read as the term range [lo, succ(lo))
+        of the live dictionary rows, in term order. Stops once it holds
+        more than ``limit`` keys."""
         lo = pattern if field is None else field + FIELD_SEP + pattern
-        found: set[str] = set()
+        found: dict[str, set[int]] = {}
         for piece in self._scan("dictionary", ["term", "shard", "batch"],
                                 self.batches, span=(lo, _succ(lo))):
-            found.update(t for t in self._live_rows(piece)["term"].to_pylist()
-                         if field is not None or FIELD_SEP not in t)
+            piece = self._live_rows(piece)
+            for t, s in zip(piece["term"].to_pylist(),
+                            piece["shard"].to_pylist()):
+                if field is not None or FIELD_SEP not in t:
+                    found.setdefault(t, set()).add(s)
             if len(found) > limit:
                 break
-        return found
+        return {t: tuple(sorted(s)) for t, s in sorted(found.items())}
 
     # ----------------------------------------------------------- reads
 
@@ -307,6 +329,12 @@ class IndexMeta:
             if hi is not None:
                 df = df.where(F.col("term") < hi)
         return df.select(*columns).toArrow()
+
+
+def without_shards(found: dict[str, dict]) -> dict[str, dict]:
+    """:meth:`IndexMeta.locate` rows as {term: {df, cf, max_tf}}."""
+    return {t: {c: d[c] for c in ("df", "cf", "max_tf")}
+            for t, d in found.items()}
 
 
 def _touched_row_groups(frag, spans: list[tuple]) -> list[int]:

@@ -33,12 +33,13 @@ shards as the members hold together.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import cached_property, reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from idzebra_spark.meta import without_shards
 from idzebra_spark.operators.wand import SegmentIndex
 
 # shard-id stride between member databases — far above any real
@@ -50,31 +51,51 @@ class _MetaUnion:
     """The members' driver-side metadata readers as one: live pairs
     with strided shard ids, summed totals, per-term sums of the
     members' lookups (df and cf add, max_tf takes the max) and the
-    union of their prefix matches."""
+    union of their prefix matches. Every shard id a member read names
+    is strided as ``live`` is."""
 
     def __init__(self, members):
         self.members = members
+        self.spark = members[0].spark
         self.live = pd.concat(
             [m.live.assign(shard=m.live["shard"] + i * DB_STRIDE)
              for i, m in enumerate(members)], ignore_index=True)
+
+    @cached_property
+    def shard_batch(self) -> DataFrame:
+        """The live (shard, batch) pairs as a Spark frame."""
+        return self.spark.createDataFrame(self.live,
+                                          "shard long, batch string")
 
     def totals(self) -> tuple[int, int]:
         n, s = zip(*(m.totals() for m in self.members))
         return sum(n), sum(s)
 
-    def lookup(self, terms) -> dict[str, dict]:
+    def shard_docs(self) -> dict[int, int]:
+        return {s + i * DB_STRIDE: n for i, m in enumerate(self.members)
+                for s, n in m.shard_docs().items()}
+
+    def locate(self, terms) -> dict[str, dict]:
         out: dict[str, dict] = {}
-        for m in self.members:
-            for t, d in m.lookup(terms).items():
-                o = out.setdefault(t, {"df": 0, "cf": 0, "max_tf": 0})
+        for i, m in enumerate(self.members):
+            for t, d in m.locate(terms).items():
+                o = out.setdefault(
+                    t, {"df": 0, "cf": 0, "max_tf": 0, "shards": ()})
                 o["df"] += d["df"]
                 o["cf"] += d["cf"]
                 o["max_tf"] = max(o["max_tf"], d["max_tf"])
+                o["shards"] += tuple(s + i * DB_STRIDE for s in d["shards"])
         return out
 
-    def prefix(self, field, pattern, limit) -> set[str]:
-        return set().union(
-            *(m.prefix(field, pattern, limit) for m in self.members))
+    def lookup(self, terms) -> dict[str, dict]:
+        return without_shards(self.locate(terms))
+
+    def prefix(self, field, pattern, limit) -> dict[str, tuple[int, ...]]:
+        out: dict[str, tuple[int, ...]] = {}
+        for i, m in enumerate(self.members):
+            for t, s in m.prefix(field, pattern, limit).items():
+                out[t] = out.get(t, ()) + tuple(x + i * DB_STRIDE for x in s)
+        return dict(sorted(out.items()))
 
 
 class MultiSegmentIndex(SegmentIndex):
@@ -101,8 +122,6 @@ class MultiSegmentIndex(SegmentIndex):
             return reduce(lambda a, b: a.unionByName(b), frames)
 
         self.meta = _MetaUnion([s.meta for s in self.subs])
-        self.shard_batch = spark.createDataFrame(
-            self.meta.live, "shard long, batch string")
         self.blocks = union_all(
             [shift(s.blocks, i) for i, s in enumerate(self.subs)])
         self.norms = union_all(

@@ -880,7 +880,6 @@ class SegmentIndex:
         # update/reindex wins by build_seq) — is read on the driver,
         # with no Spark job.
         self.meta = IndexMeta(spark, path)
-        self.shard_batch = self.meta.shard_batch
         self.blocks = self.meta.frame("blocks", with_batch(BLOCK_SCHEMA))
         self.norms = self.meta.frame("norms", with_batch(NORMS_SCHEMA))
         self._init_serving(cache_hot)
@@ -898,6 +897,7 @@ class SegmentIndex:
         exchanges. This is the full ISAMB-page-cache shape: the layout
         cost is paid once at cache fill, queries only ever read it."""
         self._cache_hot = cache_hot
+        self._live_shards = frozenset(map(int, self.meta.live["shard"]))
         if cache_hot:
             self.blocks = self._pin(self.blocks).cache()
             self.norms = self._pin(self.norms).cache()
@@ -906,6 +906,12 @@ class SegmentIndex:
         self._expand_memo: dict[tuple, tuple[str, ...]] = {}
 
     # -------------------------------------------------------- metadata
+
+    @property
+    def shard_batch(self) -> DataFrame:
+        """The live (shard, batch) pairs as a Spark frame, built on
+        first use (no query reads it)."""
+        return self.meta.shard_batch
 
     def stats(self) -> tuple[int, float]:
         """(N, avgdl) — from the live per-shard norms rows (always
@@ -933,8 +939,8 @@ class SegmentIndex:
         return self.meta.frame("doc_meta")
 
     def lookup_terms(self, terms: list[str]) -> dict[str, dict]:
-        """Dictionary lookup → {term: {df, cf, max_tf}} for the terms
-        present, through :meth:`resolve` (memoized per handle)."""
+        """Dictionary lookup → {term: {df, cf, max_tf, shards}} for the
+        terms present, through :meth:`resolve` (memoized per handle)."""
         info, _ = self.resolve(terms)
         return {t: info[t] for t in terms if info[t] is not None}
 
@@ -945,8 +951,10 @@ class SegmentIndex:
 
         ``terms``: exact dictionary keys; ``patterns``: expansion keys
         (kind, pattern, field, errors, stem) as :func:`tree_patterns`
-        yields them. Returns ({term: {df, cf, max_tf} | None},
-        {pattern: sorted matching terms}).
+        yields them. Returns ({term: {df, cf, max_tf, shards} | None},
+        {pattern: {matching term: shards}, in term order}), where
+        ``shards`` are the sorted ids of the live shards holding the
+        term — what :meth:`_score` plans a query's shard set from.
 
         Hits come from the per-handle LRU memos (dict/dict-p.h:44-70)
         at no cost. Exact-term and prefix misses are driver-side Arrow
@@ -955,9 +963,10 @@ class SegmentIndex:
         dictionary (dict/dict-p.h:30-41) — with no Spark job. Suffix,
         contains, regex, z3958 and fuzzy misses need every term, so
         they are answered by ONE filtered dictionary collect (one per
-        RESOLVE_CHUNK such patterns). The memo still wins on warm
-        terms: a hit costs no file read. Each pattern keeps its own
-        MAX_EXPAND bound: a pattern past it raises, naming that
+        RESOLVE_CHUNK such patterns); one exact driver read of the
+        terms it found then names their shards. The memo still wins on
+        warm terms: a hit costs no file read. Each pattern keeps its
+        own MAX_EXPAND bound: a pattern past it raises, naming that
         pattern, and never truncates another pattern's terms."""
         info, exp = {}, {}
         for t in terms:
@@ -971,7 +980,7 @@ class SegmentIndex:
         miss_t = sorted(set(terms) - info.keys())
         miss_p = list(dict.fromkeys(k for k in patterns if k not in exp))
         if miss_t:
-            found = self.meta.lookup(miss_t)
+            found = self.meta.locate(miss_t)
             for t in miss_t:
                 info[t] = found.get(t)
                 _memo_put(self._term_memo, t, info[t], TERM_MEMO_MAX)
@@ -981,12 +990,16 @@ class SegmentIndex:
         for i in range(0, len(grep), RESOLVE_CHUNK):
             chunk = grep[i:i + RESOLVE_CHUNK]
             hits.update(zip(chunk, self._dictionary_grep(chunk)))
+        grep = [k for k in grep if len(hits[k]) <= self.MAX_EXPAND]
+        placed = self.meta.locate({t for k in grep for t in hits[k]})
+        for key in grep:
+            hits[key] = {t: placed[t]["shards"] for t in hits[key]}
         wide = None
         for key in miss_p:
             if len(hits[key]) > self.MAX_EXPAND:
                 wide = wide or key
                 continue
-            exp[key] = tuple(sorted(hits[key]))
+            exp[key] = dict(sorted(hits[key].items()))
             _memo_put(self._expand_memo, key, exp[key], EXPAND_MEMO_MAX)
         if wide is not None:
             raise ValueError(
@@ -1028,27 +1041,32 @@ class SegmentIndex:
             except Exception:
                 pass
 
-    def _norms_side(self, blk: DataFrame) -> DataFrame:
-        """The norms input of a cogrouped kernel, already pinned.
+    def _norms_side(self, shards: set[int]) -> DataFrame:
+        """The norms input of the kernel cogroup: the norms rows of the
+        query's shard set, which the driver planned from the
+        dictionary (:meth:`_score`), so no Spark stage works it out.
+        Both handle kinds build it the same way.
 
-        Serving mode (cache_hot): ``self.norms`` is already persisted
-        hash-partitioned by shard (see ``__init__``), so it is the
-        norms input as-is — the kernels emit nothing for a shard
-        group with no blocks, so dropping the per-query semi-join
-        prune changes no result, while the per-query norms shuffle
-        AND the blk-distinct aggregate subtree disappear from every
-        plan (the persisted frame's hashpartitioning(shard, p)
-        satisfies the cogroup's required distribution, so no exchange
-        is re-inserted). This is the Zebra ISAMB page-cache shape:
-        pay the layout cost on first touch, serve from it afterwards.
+        Serving mode (cache_hot): ``self.norms`` is persisted
+        hash-partitioned by shard (see ``__init__``), and a filter
+        keeps that partitioning, so it satisfies the cogroup's required
+        distribution and the query stays ONE stage with no exchange. A
+        pinned partition that holds no shard of the set gets no rows on
+        either side and starts no Python runner. This is the Zebra
+        ISAMB page-cache shape: pay the layout cost on first touch,
+        serve from it afterwards.
 
-        Batch mode: keep the semi-join prune — a one-shot query on
-        rare terms shuffles far fewer norm rows, and nothing is
-        retained across calls."""
-        if self._cache_hot:
-            return self.norms
-        return self._pin(self.norms.join(
-            blk.select("shard").distinct(), "shard", "semi"))
+        Batch mode: the filtered norms are pinned like the blocks (see
+        :meth:`_pin`); a one-shot query on rare terms shuffles only
+        its shards' norm rows."""
+        return self._kernel_input(self._in_shards(self.norms, shards))
+
+    def _in_shards(self, df: DataFrame, shards: set[int]) -> DataFrame:
+        """``df`` narrowed to ``shards``: a driver-built ``shard IN``
+        filter, or ``df`` itself when they are every live shard."""
+        if shards >= self._live_shards:
+            return df
+        return df.where(F.col("shard").isin(sorted(shards)))
 
     def _kernel_input(self, blk: DataFrame) -> DataFrame:
         """The blocks input of a per-shard kernel. Serving mode: the
@@ -1089,7 +1107,9 @@ class SegmentIndex:
         missing terms runs no job. Each spec's rank terms are its own
         tree's terms (a term another query in the batch decodes never
         leaks into its BM25), summed in ascending (df, term) order.
-        ``rank=False`` (counts, hit sets) leaves ``idf`` empty."""
+        Each spec's ``shards`` are the live shards that hold one of its
+        terms, as the dictionary names them. ``rank=False`` (counts,
+        hit sets) leaves ``idf`` empty."""
         n_docs, _ = self.stats()
         if n_docs == 0:
             return []
@@ -1101,6 +1121,9 @@ class SegmentIndex:
             sorted(lookups),
             [key for tree in trees.values() for key in tree_patterns(tree)])
         absent = {t for t, v in info.items() if v is None}
+        shards_of = {t: v["shards"] for t, v in info.items() if v}
+        for hits in exp.values():
+            shards_of.update(hits)
         specs = []
         for qid, tree in trees.items():
             tree = _expand_tree(tree, exp)
@@ -1113,26 +1136,36 @@ class SegmentIndex:
             idf = {t: math.log(1.0 + (n_docs - df[t] + 0.5) / (df[t] + 0.5))
                    for t in order if t in rank_of[qid]}
             specs.append({"qid": str(qid), "tree": tree, "terms": terms,
-                          "idf": idf, "order": order})
+                          "idf": idf, "order": order,
+                          "shards": set().union(
+                              *(shards_of[t] for t in terms))})
         return specs
 
     def _score(self, specs: list[dict], k: int | None,
-               blocks: DataFrame | None = None) -> DataFrame:
+               within=None) -> DataFrame:
         """The one plan under every query surface: the specs' resolved
-        terms filter the blocks (``blocks``, when given, narrows them
-        first, e.g. to sampled shards), then ONE cogroup with the norms
-        runs :func:`_query_kernel` per shard → (query_id, doc_id, raw).
+        terms filter the blocks, then ONE cogroup with the norms runs
+        :func:`_query_kernel` per shard → (query_id, doc_id, raw).
+
+        The shard set S is planned on the driver: the union of the
+        specs' ``shards`` (the live shards the dictionary names for
+        their terms), cut to ``within`` when given (e.g. sampled
+        shards). Blocks and norms are both read through ``shard IN S``
+        (:meth:`_in_shards`; no filter when S is every live shard), so
+        no plan scans the blocks a second time to find S.
         No spec → an empty frame the optimizer folds away: no job."""
         if not specs:
             return self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
         terms = sorted(set().union(*(s["terms"] for s in specs)))
-        blk = (self.blocks if blocks is None else blocks).where(
+        shards = set().union(*(s["shards"] for s in specs))
+        if within is not None:
+            shards &= set(within)
+        blk = self._in_shards(self.blocks, shards).where(
             F.col("term").isin(terms))
-        nrm = self._norms_side(blk)
         kernel = _query_kernel(specs, self.stats()[1], k)
         return (
             self._kernel_input(blk).groupBy("shard")
-            .cogroup(nrm.groupBy("shard"))
+            .cogroup(self._norms_side(shards).groupBy("shard"))
             .applyInPandas(kernel, TOPK_SCHEMA)
         )
 
@@ -1144,7 +1177,11 @@ class SegmentIndex:
         query runs as its flat rset tree (:func:`_flat_tree`).
 
         Serving shape: the dictionary lookup is a separate step on the
-        driver, in front of the one kernel job. A memo miss is an
+        driver, in front of the one kernel job. It also names the live
+        shards that hold the terms, and the plan reads only their
+        blocks and norms (:meth:`_score`): a fresh handle runs 3 jobs
+        (blocks and norms pinned, then the kernel stage), a cache_hot
+        handle one stage. A memo miss is an
         Arrow read of the row groups of the term-sorted dictionary
         files that can hold the terms — Zebra's paged dictionary
         (dict/dict-p.h:30-41) — not a Spark job; a memo hit (Zebra's
@@ -1388,27 +1425,34 @@ class SegmentIndex:
         ``approx_hit_count`` oracle entry uses it); 'hash'
         pseudo-randomizes the shard draw via xxhash64 (useful when
         docid ranges correlate with content and systematic sampling
-        would alias)."""
+        would alias).
+
+        The pick is made on the driver from the live shard ids (the
+        'hash' picker evaluates Spark's xxhash64 over a local frame of
+        them), the sampled doc count is summed from the driver-side
+        per-shard norms, and the sampled count is :meth:`_score` cut to
+        the picked shards: only the count itself is a Spark plan."""
         specs = self._specs({"": _flat_tree(terms, mode)}, rank=False)
         if not specs:
             return 0
-        shards = self.norms.select("shard", "n_docs")
+        live = sorted(self._live_shards)
         if picker == "stride":
             stride = max(int(round(1.0 / sample)), 1)
-            picked = shards.where(F.pmod(F.col("shard"), stride) == 0)
+            picked = [s for s in live if s % stride == 0]
         else:
-            picked = shards.where(
+            picked = [r["shard"] for r in self.spark.createDataFrame(
+                [(s,) for s in live], "shard long").where(
                 F.pmod(F.xxhash64("shard"), 1000) < int(sample * 1000)
-            )
-        got = picked.agg(F.sum("n_docs")).collect()[0][0]
+            ).collect()]
+        n_docs = self.meta.shard_docs()
+        got = sum(n_docs.get(s, 0) for s in picked)
         if not got:
             return self._score(specs, None).count()
-        sampled_hits = self._score(specs, None, self.blocks.join(
-            picked.select("shard"), "shard", "semi")).count()
+        sampled_hits = self._score(specs, None, picked).count()
         # integer half-up scale: no float, no banker's-rounding skew —
         # DuckDB computes the identical value from the same integers
         tot = self.stats()[0]
-        return int((sampled_hits * tot + int(got) // 2) // int(got))
+        return int((sampled_hits * tot + got // 2) // got)
 
     def phrase(self, terms: list[str], k: int = 10) -> DataFrame:
         """Exact adjacent phrase over the segment's stored positions →

@@ -78,7 +78,8 @@ def main() -> None:
         "Structured rset-DAG query (search_tree)",
         "The whole boolean tree evaluates INSIDE one cogrouped "
         "FlatMapCoGroupsInPandas kernel per shard — one pruned block "
-        "scan for all leaves, one norms semi-join, then a 10-row "
+        "scan for all leaves, the norms of the shards the driver "
+        "planned from the dictionary (no semi-join), then a 10-row "
         "TakeOrderedAndProject merge. No per-leaf shuffles, no corpus "
         "re-tokenization, ranking uses corpus-global stats.",
         explain_str(st),
@@ -93,7 +94,8 @@ def main() -> None:
     sections.append((
         "Batched multi-query kernel (topk_many)",
         "All queries share ONE pruned block scan (term IN covers the "
-        "union of every query's terms), one norms semi-join and one "
+        "union of every query's terms), one norms read cut to the "
+        "driver-planned shards and one "
         "FlatMapCoGroupsInPandas pass; the per-query top-k is a "
         "window over (query_id) on ~shards x k x n_queries rows — "
         "metadata-sized. N queries pay ONE Spark job, which is what "

@@ -65,9 +65,9 @@ def worker(cores: int, n_docs: int) -> None:
         build_secs.append(time.perf_counter() - t0)
     build_sec = min(build_secs)
 
-    # serving mode: cache_hot pins blocks+norms AND persists the
-    # shard-pinned norms frame once (_norms_side) — the steady-state
-    # shape every query reuses; identical at both parallelism levels
+    # serving mode: cache_hot pins blocks+norms hash-partitioned by
+    # shard once — the steady-state shape every query reuses;
+    # identical at both parallelism levels
     idx = SegmentIndex(spark, path, cache_hot=True)
     idx.stats()
     # warm-up: spawn python workers / JIT once, outside the timed

@@ -147,6 +147,143 @@ def test_fresh_handle_topk_runs_no_broadcast_job(spark, states, name):
         snapshot, terms, 5, text_col="content").collect()]
 
 
+def _plan_and_rows(df):
+    return (df._jdf.queryExecution().optimizedPlan().toString(),
+            [(r.doc_id, r.score_milli) for r in df.collect()])
+
+
+@pytest.mark.parametrize("name", ["fresh", "partial"])
+def test_fresh_handle_topk_reads_driver_planned_shards(spark, states, name):
+    """The dictionary lookup names the live shards that hold the query
+    terms, and the norms are read through a driver-built ``shard IN``
+    filter instead of a semi-join to the blocks' distinct shards: a
+    fresh handle's first top-k runs at most 3 Spark jobs (5 with the
+    semi-join), its plan holds no semi-join and no aggregate on
+    ``shard``, and it returns the brute-force rows of the snapshot."""
+    import re
+
+    from idzebra_spark.operators.bruteforce import bm25_topk
+    from idzebra_spark.operators.wand import SegmentIndex
+
+    terms = ["zzqmarker", "sort"]
+    n, (plan, got) = _jobs(spark, lambda: _plan_and_rows(
+        SegmentIndex(spark, states[name]).topk(terms, 5)))
+    assert n <= 3, n
+    assert "LeftSemi" not in plan, plan
+    assert not re.search(r"Aggregate \[shard", plan), plan
+    corpus = _corpus(spark)
+    snapshot = corpus if name == "fresh" else _edited(corpus)
+    assert got == [(r.doc_id, r.score_milli) for r in bm25_topk(
+        snapshot, terms, 5, text_col="content").collect()]
+
+
+def test_open_and_topk_build_no_shard_batch_frame(spark, states):
+    """Opening a handle and running a top-k build no Spark frame of
+    the live (shard, batch) pairs: ``shard_batch`` is built on first
+    use only."""
+    from idzebra_spark.operators.wand import SegmentIndex
+
+    idx = SegmentIndex(spark, states["partial"])
+    idx.topk(["zzqmarker", "sort"], 5).collect()
+    assert "shard_batch" not in idx.meta.__dict__
+
+
+def _jobs_and_stages(spark, fn):
+    """(Spark jobs, stages of those jobs that ran a task) ``fn`` ran;
+    a stage whose output a cache or shuffle already holds is skipped
+    and not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"t_meta-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "t_meta")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    return len(jobs), sum(1 for s in stages
+                          if tracker.getStageInfo(s) is not None
+                          and tracker.getStageInfo(s).numCompletedTasks)
+
+
+@pytest.mark.parametrize("query", ["zzqmarker", "sort"])
+def test_cache_hot_search_is_one_stage(spark, states, query):
+    """On a cache_hot handle the shard filter is applied to the pinned
+    frames, which keeps their hash partitioning: a single search, on
+    a term one shard holds or on one every shard holds, is one job of
+    one stage (no exchange)."""
+    from idzebra_spark.api import ZebraSpark
+
+    zs = ZebraSpark(spark, states["partial"], text_col="content",
+                    cache_hot=True)
+    want = [tuple(r) for r in zs.search(query, 5).collect()]  # fills
+    assert _jobs_and_stages(spark, lambda: zs.search(query, 5).collect()) \
+        == (1, 1)
+    assert [tuple(r) for r in zs.search(query, 5).collect()] == want
+
+
+# on the 5-shard fixture: zzqmarker lives in shard 0 of the partial
+# index, "185" in shards 1 and 3, "198" in shards 0 and 1
+PLANNED_TREES = {
+    "rare": ("term", "zzqmarker"),
+    "prefix": ("or", [("term", "zzqmarker"), ("prefix", "185")]),
+    "suffix": ("or", [("suffix", "marker"), ("suffix", "198")]),
+    "broad": ("or", [("term", "sort"), ("term", "return")]),
+}
+
+
+def _tree_rows(idx, trees, k=50):
+    single = {q: sorted(tuple(r) for r in idx.search_tree(t, k).collect())
+              for q, t in trees.items()}
+    batch = {q: [] for q in trees}
+    for r in idx.search_tree_many(trees, k).collect():
+        batch[r.query_id].append((r.doc_id, r.score_milli))
+    return single, {q: sorted(v) for q, v in batch.items()}
+
+
+@pytest.mark.parametrize("name", ["partial", "multi"])
+def test_planned_shards_keep_every_row(spark, states, name, monkeypatch):
+    """A rare term that lives in one shard, and prefix and suffix
+    queries whose terms live in some shards but not all, on a fresh
+    handle over a partly-live index and over a two-member
+    ``open_databases`` handle: single and batched rows equal the
+    cache_hot handle's and those of the same plan with no shard
+    filter, and the rare term's rows equal the brute-force top-k."""
+    from idzebra_spark.operators.bruteforce import bm25_topk
+    from idzebra_spark.operators.multidb import open_databases
+    from idzebra_spark.operators.wand import SegmentIndex
+
+    paths = [states["fresh"], states["partial"]]
+
+    def handle(cache_hot=False):
+        if name == "multi":
+            return open_databases(spark, paths, cache_hot=cache_hot)
+        return SegmentIndex(spark, states[name], cache_hot=cache_hot)
+
+    idx = handle()
+    located = idx.meta.locate(["zzqmarker", "185", "198"])
+    assert [len(located[t]["shards"]) for t in ("zzqmarker", "185", "198")] \
+        == ([1, 2, 2] if name == "partial" else [1, 4, 4])
+    single, batch = _tree_rows(idx, PLANNED_TREES)
+    assert single == batch
+    assert len(single["rare"]) == 5
+    assert len(single["prefix"]) > 5 and len(single["suffix"]) > 5
+    hot = handle(cache_hot=True)
+    assert _tree_rows(hot, PLANNED_TREES) == (single, batch)
+    hot.close()
+    monkeypatch.setattr(SegmentIndex, "_in_shards",
+                        lambda self, df, shards: df)
+    assert _tree_rows(handle(), PLANNED_TREES) == (single, batch)
+    if name == "partial":
+        want = [(r.doc_id, r.score_milli) for r in bm25_topk(
+            _edited(_corpus(spark)), ["zzqmarker"], 5,
+            text_col="content").collect()]
+        assert single["rare"] == sorted(want)
+
+
 def test_dictionary_exact_after_two_partial_updates(spark, tmp_path,
                                                     monkeypatch):
     """Build, update one of 10 shards, then update that shard and one

@@ -266,6 +266,27 @@ def test_approx_count_takes_n_from_stats(spark, seg_idx):
     assert n_jobs <= 15 - 2
 
 
+def test_approx_count_picks_shards_on_the_driver(spark, seg_idx):
+    """approx_count picks the sampled shards from the live shard ids,
+    sums their doc counts from the driver-side norms rows, and cuts
+    the sampled count to them with a ``shard IN`` filter. On this
+    fixture (local[4]) the stride picker runs 4 jobs; the previous
+    code (a Spark aggregate over the norms for the doc count and a
+    semi-join of the blocks to the picked shards) ran 9. The hash
+    picker adds one job, its xxhash64 over a local frame of the live
+    shard ids. Both give the values the Spark pick gave."""
+    idx = seg_idx
+    idx.approx_count(["merge", "sort"])  # warm the handle's memos
+    n_stride, stride = _jobs_in_group(
+        spark, "t_r3_stride", lambda: idx.approx_count(["merge", "sort"]))
+    n_hash, hashed = _jobs_in_group(
+        spark, "t_r3_hash",
+        lambda: idx.approx_count(["merge", "sort"], picker="hash"))
+    assert (stride, hashed) == (479, 479)
+    assert n_stride <= 4 < 9, n_stride
+    assert n_hash <= n_stride + 1, n_hash
+
+
 def test_query_kernel_prunes_a_batch_losslessly(seg_idx, monkeypatch):
     """The one kernel, called in-process on one shard's rows (no Spark
     job) with a batch of two flat ORs sharing a term, an AND and an
