@@ -19,4 +19,10 @@ Layout
 - ``streaming``  : incremental ingest over Structured Streaming
 """
 
+from idzebra_spark import _pyworker
+
 __version__ = "0.1.0"
+
+# a Spark task that unpickles an engine kernel imports the package:
+# from that worker's next task on, no task re-reads pyspark.zip
+_pyworker.install()

@@ -23,7 +23,11 @@ Only live batch directories are listed, only the named columns are
 read, and term reads open only the row groups whose term min/max
 overlaps a wanted term or prefix range. Posting payloads
 (``docids_bin``, ``tfs_bin``, ``pos_bin``, ``doclens_bin``) are never
-read. Nothing is cached here; the handle's LRU memos hold the results.
+read. A committed batch directory never changes, so an instance lists
+each live batch directory of a partitioned table and reads each of its
+file footers once; the unpartitioned ``lineage`` is read afresh by each
+instance. No rows are cached here; the handle's LRU memos hold the
+results.
 :meth:`IndexMeta.frame` hands the live rows of a table to Spark with
 a schema it already knows, so no read pays a schema-inference job.
 
@@ -136,6 +140,7 @@ class IndexMeta:
         self.path = path
         fs = _open_fs(path)
         self._fs, self._root = fs if fs is not None else (None, None)
+        self._frags: dict[tuple[str, str], list] = {}
         lin = self._table("lineage", ["shard", "batch", "build_seq"]) \
             .to_pandas()
         latest = lin.groupby("shard", as_index=False)["build_seq"].max()
@@ -180,8 +185,7 @@ class IndexMeta:
         """Spark schema of a data file of a live batch of ``table``."""
         if self._fs is None:
             return None
-        for _, fpath in self._files(table, self.batches):
-            frag = _PARQUET.make_fragment(fpath, filesystem=self._fs)
+        for _, frag in self._fragments(table, self.batches):
             return with_batch(from_arrow_schema(frag.physical_schema))
         return None
 
@@ -282,8 +286,8 @@ class IndexMeta:
             row_filter, spans = None, None
         file_cols = [c for c in columns
                      if not (batches is not None and c == "batch")]
-        for batch, fpath in self._files(table, batches):
-            frag = _PARQUET.make_fragment(fpath, filesystem=self._fs)
+        for batch, frag in self._fragments(table, batches):
+            frag.ensure_complete_metadata()  # the footer, kept by frag
             if spans is not None:
                 ids = _touched_row_groups(frag, spans)
                 if not ids:
@@ -294,6 +298,27 @@ class IndexMeta:
                 t = t.append_column(
                     "batch", pa.array([batch] * t.num_rows, pa.string()))
             yield t.select(columns).cast(schema)
+
+    def _fragments(self, table: str, batches) -> list:
+        """(batch, parquet fragment) of each data file of ``table``'s
+        ``batches`` partitions, or (None, fragment) of the whole
+        unpartitioned table when None. A partitioned table's fragments
+        are kept per batch for the instance's lifetime, and with them
+        each footer once read: its live batch directories are committed
+        and never change. The unpartitioned table (the lineage) is
+        listed on every call."""
+        if batches is None:
+            return [(None, _PARQUET.make_fragment(p, filesystem=self._fs))
+                    for _, p in self._files(table, None)]
+        out = []
+        for b in batches:
+            frags = self._frags.get((table, b))
+            if frags is None:
+                frags = self._frags[(table, b)] = [
+                    _PARQUET.make_fragment(p, filesystem=self._fs)
+                    for _, p in self._files(table, [b])]
+            out.extend((b, frag) for frag in frags)
+        return out
 
     def _files(self, table: str, batches):
         """(batch, data file path) of each live batch directory of a

@@ -19,6 +19,12 @@ on a warm JVM:
   against the distinct terms of the range's live dictionary rows
   (Spark) and of its live ``blocks`` metadata (driver).
 
+The reader's lookup and prefix are timed twice: ``reader_first`` is
+the first read on a new ``IndexMeta`` (it lists the live batch
+directories and opens their file footers; the instance is made
+outside the timing), ``reader`` a repeated read on one warm instance
+(which keeps those footers).
+
 Each op also counts the Spark jobs it ran (status tracker, one job
 group per op), and the reader's ops record which tables they opened.
 Every side must return the same rows. The JSON names the machine:
@@ -45,6 +51,17 @@ sys.path.insert(0, REPO)
 
 TERM = "block"
 PREFIX = "sh"
+
+
+class First:
+    """A reader op timed as the first read of a new IndexMeta: called
+    with an instance made outside the timing."""
+
+    def __init__(self, fn):
+        self.fn = fn
+
+    def __call__(self, meta):
+        return self.fn(meta)
 
 
 def _arg(name: str, default):
@@ -91,12 +108,13 @@ def main() -> None:
     IndexMeta._files = files
 
     def timed(fn):
+        fresh = IndexMeta(spark, path) if isinstance(fn, First) else None
         group = f"probe-{uuid.uuid4().hex}"
         sc.setJobGroup(group, "probe_meta_plane")
         opened.clear()
         t0 = time.perf_counter()
         try:
-            out = fn()
+            out = fn(fresh) if fresh is not None else fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         dt = time.perf_counter() - t0
@@ -154,14 +172,18 @@ def main() -> None:
             "open_stats": {"reader": reader_open_stats,
                            "spark": spark_open_stats},
             "lookup": {"reader": lambda: meta.lookup([TERM]),
+                       "reader_first": First(lambda m: m.lookup([TERM])),
                        "spark": spark_lookup, "blocks": blocks_lookup},
-            "prefix": {"reader": lambda: meta.prefix(None, PREFIX, 10000),
+            "prefix": {"reader": lambda: set(meta.prefix(None, PREFIX,
+                                                         10000)),
+                       "reader_first": First(
+                           lambda m: set(m.prefix(None, PREFIX, 10000))),
                        "spark": spark_prefix, "blocks": blocks_prefix},
         }
         # warm every path once (JVM codegen, imports) before timing
         for sides in ops.values():
             for fn in sides.values():
-                fn()
+                timed(fn)
         result = {}
         for name, sides in ops.items():
             row, outs = {}, {}
@@ -172,8 +194,8 @@ def main() -> None:
                     statistics.median(r[0] for r in runs), 5)
                 row[f"{side}_jobs"] = max(r[1] for r in runs)
                 outs[side] = runs[-1][3]
-                if side == "reader":
-                    row["reader_tables"] = runs[-1][2]
+                if side.startswith("reader"):
+                    row[f"{side}_tables"] = runs[-1][2]
             if name == "open_stats":
                 outs["spark"] = outs["spark"][1]
             want = outs.pop("reader")

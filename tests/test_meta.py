@@ -350,6 +350,52 @@ def test_dictionary_exact_after_two_partial_updates(spark, tmp_path,
     assert set(opened) == {"dictionary"}, opened
 
 
+def test_repeated_reads_open_no_footer(spark, states, tmp_path,
+                                       monkeypatch):
+    """A handle lists each live batch directory and opens each file
+    footer once: a second locate, prefix and totals on the same
+    IndexMeta make no parquet fragment and return the same rows. A
+    handle opened after an update reads the new batch; the older
+    handle keeps its snapshot."""
+    from idzebra_spark import meta
+    from idzebra_spark.operators.segment import update_index
+
+    path = str(tmp_path / "memo")
+    shutil.copytree(states["partial"], path)
+    made = []
+    real = meta._PARQUET
+
+    class Spy:
+        def make_fragment(self, *a, **kw):
+            made.append(a[0])
+            return real.make_fragment(*a, **kw)
+
+    monkeypatch.setattr(meta, "_PARQUET", Spy())
+
+    def reads(m):
+        return (m.locate(["zzqmarker", "block", "zzqfresh"]),
+                m.prefix(None, "zzq", 100), m.totals())
+
+    old = meta.IndexMeta(spark, path)
+    first = reads(old)
+    assert any("/dictionary/" in f for f in made)
+    assert any("/norms/" in f for f in made)
+    made.clear()
+    assert reads(old) == first and made == []
+
+    corpus = _edited(_corpus(spark))
+    update_index(spark, corpus.withColumn("content", F.when(
+        F.col("doc_id") == 300, F.concat("content", F.lit(" zzqfresh")))
+        .otherwise(F.col("content"))), path, text_col="content",
+        shard_size=128, block_size=64, fields={"p": ["lang"]})
+    new = meta.IndexMeta(spark, path)
+    assert len(set(new.batches) - set(old.batches)) == 1
+    assert "zzqfresh" in new.locate(["zzqfresh"])
+    assert "zzqfresh" in new.prefix(None, "zzq", 100)
+    made.clear()
+    assert reads(old) == first and made == []
+
+
 def test_open_stats_and_lookup_run_no_job(spark, states):
     """A local-path open plus stats() runs no Spark job, and a flat
     search whose terms miss the memo runs as many jobs as the same
